@@ -1,16 +1,21 @@
 #!/usr/bin/env python3
 """Seeded input generator for the benchmark.
 
-Writes every input a workload needs under one output directory and nothing
-anywhere else. The same (workload, seed) gives byte-identical files: every
-random draw comes from numpy's PCG64 seeded with the seed, and parquet is
-written by pyarrow with fixed settings.
+The tables come from the sf0.1 test-data drop: `orders`, `documents` and
+`embeddings` are committed under perfbench/data/sf0.1 (byte for byte), and
+`analytic_mix` reads every TPC-H table from $SPARK_GRAFT_SF_DIR, the
+directory graft.Bench reads. The generator copies them into one output
+directory and adds only the seeded parts: the lifecycle write batches and
+predicates, the planted duplicates and the truth the checks compare
+against. It writes nothing anywhere else. The same (workload, seed) gives
+byte-identical files: every random draw comes from numpy's PCG64 seeded
+with the seed, and parquet is written by pyarrow with fixed settings.
 
     python3 perfbench/gen.py <workload> <seed> <out_dir>
 
 Layout:
-  data/<table>.parquet   TPC-H-like tables at sf0.1 row counts (the same
-                         schema as the engine's declared queries read)
+  data/<table>.parquet   the sf0.1 tables the workload reads
+  data_small/            analytic_mix: a slice of every table, for warm-up
   plan.json              traffic dimensions, the lifecycle op plan and the
                          expected results the checks compare against
   batches/<i>.parquet    table_lifecycle write batches
@@ -19,19 +24,18 @@ Layout:
 import hashlib
 import json
 import os
+import shutil
 import sys
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-SF_ROWS = {"region": 5, "nation": 25, "customer": 15000, "supplier": 1000,
-           "part": 20000, "orders": 150000, "lineitem": 600000,
-           "events": 100000, "documents": 5000, "embeddings": 2000}
-
-VOCAB = ("a the batch part spark line column order small sort fast value "
-         "scan hash slow group agg filter query big key window row table "
-         "stream merge data vector join shard index").split()
+HERE = os.path.dirname(os.path.abspath(__file__))
+DATA = os.path.join(HERE, "data", "sf0.1")
+TPCH = ("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents", "embeddings")
 
 # table_lifecycle traffic dimensions
 LIFE_PASSES = 20          # plan length in passes; a run runs a prefix
@@ -45,6 +49,7 @@ LIFE_BUCKETS = 8          # partitions of the versioned table
 # llm_dedup traffic dimensions
 DEDUP_K = 1               # corpus = sf0.1 documents/embeddings x k
 DEDUP_SHARE = 0.05        # planted near-duplicate share (and exact share)
+DEDUP_OFFSET = 10_000_000 # key offset between replicas
 
 
 def write(table, path):
@@ -53,135 +58,15 @@ def write(table, path):
                    write_statistics=True, row_group_size=1 << 20)
 
 
-def ts_us(rng, n, lo, hi):
-    """n timestamps (µs) uniform in [lo, hi) numpy datetime64 bounds."""
-    a = np.datetime64(lo, "us").astype(np.int64)
-    b = np.datetime64(hi, "us").astype(np.int64)
-    return rng.integers(a, b, n).astype("datetime64[us]")
-
-
-def day_ts(rng, n, lo, hi):
-    a = np.datetime64(lo, "D").astype(np.int64)
-    b = np.datetime64(hi, "D").astype(np.int64)
-    return rng.integers(a, b, n).astype("datetime64[D]").astype(
-        "datetime64[us]")
-
-
-def money(rng, n, lo, hi):
-    return np.round(rng.uniform(lo, hi, n), 2)
-
-
-def pick(rng, values, n):
-    return np.array(values, dtype=object)[rng.integers(0, len(values), n)]
-
-
-def texts(rng, n, min_words=8, max_words=95):
-    lens = rng.integers(min_words, max_words + 1, n)
-    words = np.array(VOCAB, dtype=object)
-    flat = words[rng.integers(0, len(VOCAB), int(lens.sum()))]
-    out, i = [], 0
-    for m in lens:
-        out.append(" ".join(flat[i:i + m]))
-        i += m
-    return out
-
-
-def tpch_tables(rng):
-    n = SF_ROWS
-    t = {}
-    t["region"] = pa.table({
-        "r_regionkey": pa.array(np.arange(5, dtype=np.int32)),
-        "r_name": ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]})
-    t["nation"] = pa.table({
-        "n_nationkey": pa.array(np.arange(25, dtype=np.int32)),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": pa.array((np.arange(25) % 5).astype(np.int32))})
-    nc = n["customer"]
-    t["customer"] = pa.table({
-        "c_custkey": np.arange(nc, dtype=np.int64),
-        "c_name": [f"Customer#{i:09d}" for i in range(nc)],
-        "c_nationkey": rng.integers(0, 25, nc).astype(np.int32),
-        "c_acctbal": money(rng, nc, -999.99, 9999.99),
-        "c_mktsegment": pick(rng, ["AUTOMOBILE", "BUILDING", "FURNITURE",
-                                   "HOUSEHOLD", "MACHINERY"], nc)})
-    ns = n["supplier"]
-    t["supplier"] = pa.table({
-        "s_suppkey": np.arange(ns, dtype=np.int64),
-        "s_name": [f"Supplier#{i:09d}" for i in range(ns)],
-        "s_nationkey": rng.integers(0, 25, ns).astype(np.int32),
-        "s_acctbal": money(rng, ns, -999.99, 9999.99)})
-    npart = n["part"]
-    adj = ["large", "hot", "old", "red", "small", "new", "green", "blue"]
-    noun = ["ring", "bolt", "plate", "gear", "rod", "anvil", "nut", "pipe"]
-    t["part"] = pa.table({
-        "p_partkey": np.arange(npart, dtype=np.int64),
-        "p_name": [f"{a} {b}" for a, b in zip(pick(rng, adj, npart),
-                                              pick(rng, noun, npart))],
-        "p_brand": [f"Brand#{i}" for i in rng.integers(1, 26, npart)],
-        "p_type": pick(rng, ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL",
-                             "STANDARD"], npart),
-        "p_size": rng.integers(1, 51, npart).astype(np.int32),
-        "p_retailprice": np.round(900 + (np.arange(npart) % 1000) * 0.1, 2)})
-    t["orders"] = orders_table(rng, n["orders"])
-    nl = n["lineitem"]
-    t["lineitem"] = pa.table({
-        "l_orderkey": rng.integers(0, n["orders"], nl).astype(np.int64),
-        "l_partkey": rng.integers(0, npart, nl).astype(np.int64),
-        "l_suppkey": rng.integers(0, ns, nl).astype(np.int64),
-        "l_linenumber": rng.integers(1, 8, nl).astype(np.int32),
-        "l_quantity": rng.integers(1, 51, nl).astype(np.float64),
-        "l_extendedprice": money(rng, nl, 900, 105000),
-        "l_discount": np.round(rng.integers(0, 11, nl) * 0.01, 2),
-        "l_tax": np.round(rng.integers(0, 9, nl) * 0.01, 2),
-        "l_returnflag": pick(rng, ["A", "N", "R"], nl),
-        "l_linestatus": pick(rng, ["F", "O"], nl),
-        "l_shipdate": day_ts(rng, nl, "1995-01-02", "2001-11-05")})
-    ne = n["events"]
-    t["events"] = pa.table({
-        "event_id": np.arange(ne, dtype=np.int64),
-        "ts": np.sort(ts_us(rng, ne, "2024-01-01", "2024-01-31")),
-        "user_id": rng.integers(0, 1500, ne).astype(np.int64),
-        "event_type": pick(rng, ["click", "error", "purchase", "signup",
-                                 "view"], ne),
-        "value": money(rng, ne, 0, 560),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, ne)]})
-    t["documents"] = documents_table(rng, n["documents"], 0)
-    t["embeddings"] = embeddings_table(rng, n["embeddings"], 0)
-    return t
-
-
-def orders_table(rng, n):
-    return pa.table({
-        "o_orderkey": np.arange(n, dtype=np.int64),
-        "o_custkey": rng.integers(0, 15000, n).astype(np.int64),
-        "o_orderstatus": pick(rng, ["F", "O", "P"], n),
-        "o_totalprice": money(rng, n, 1000, 500000),
-        "o_orderdate": day_ts(rng, n, "1995-01-01", "2001-08-02"),
-        "o_orderpriority": pick(rng, ["1-URGENT", "2-HIGH", "3-MEDIUM",
-                                      "4-NOT SPECIFIED", "5-LOW"], n)})
-
-
-def documents_table(rng, n, key0, text=None):
-    text = texts(rng, n) if text is None else text
-    return pa.table({
-        "doc_id": np.arange(key0, key0 + n, dtype=np.int64),
-        "text": text,
-        "lang": pick(rng, ["en", "en", "en", "de", "es", "fr", "zh"], n),
-        "source": [f"src{i}" for i in rng.integers(0, 20, n)],
-        "n_chars": np.array([len(x) for x in text], dtype=np.int64)})
-
-
-def embeddings_table(rng, n, key0, vecs=None):
-    if vecs is None:
-        vecs = rng.standard_normal((n, 64)).astype(np.float32)
-        vecs /= np.linalg.norm(vecs, axis=1, keepdims=True) * 2.5
-    emb = pa.FixedSizeListArray.from_arrays(
-        pa.array(vecs.reshape(-1), pa.float32()), 64).cast(
-        pa.list_(pa.float32()))
-    return pa.table({
-        "vec_id": np.arange(key0, key0 + n, dtype=np.int64),
-        "embedding": emb,
-        "label": rng.integers(0, 10, n).astype(np.int32)})
+def copy_table(src_dir, name, out):
+    """Copy one table into out/data, byte for byte; return it read."""
+    src = os.path.join(src_dir, f"{name}.parquet")
+    if not os.path.exists(src):
+        raise SystemExit(f"perfbench: table {name} not found in {src_dir}")
+    dst = os.path.join(out, "data", f"{name}.parquet")
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    shutil.copyfile(src, dst)
+    return pq.read_table(dst)
 
 
 # ---------------------------------------------------------------- lifecycle
@@ -192,15 +77,13 @@ class Model:
     STATUS = ["F", "O", "P"]
 
     def __init__(self, orders, cap):
-        n = orders.num_rows
+        keys = orders.column("o_orderkey").to_numpy()
         self.present = np.zeros(cap, dtype=bool)
         self.cents = np.zeros(cap, dtype=np.int64)
         self.status = np.zeros(cap, dtype=np.int8)
-        self.present[:n] = True
-        self.cents[:n] = np.round(
-            orders.column("o_totalprice").to_numpy() * 100).astype(np.int64)
-        st = orders.column("o_orderstatus").to_numpy(zero_copy_only=False)
-        self.status[:n] = np.searchsorted(self.STATUS, st)
+        self.present[keys] = True
+        self.cents[keys] = cents_of(orders)
+        self.status[keys] = status_of(orders)
 
     def digest(self, mask=None):
         m = self.present if mask is None else (self.present & mask)
@@ -209,45 +92,43 @@ class Model:
                 "cents_sum": int(self.cents[keys].sum())}
 
 
+def cents_of(t):
+    return np.round(t.column("o_totalprice").to_numpy() * 100).astype(
+        np.int64)
+
+
+def status_of(t):
+    st = t.column("o_orderstatus").to_numpy(zero_copy_only=False)
+    return np.searchsorted(Model.STATUS, st).astype(np.int8)
+
+
 def lifecycle(rng, out):
-    orders = orders_table(rng, SF_ROWS["orders"])
-    write(orders, f"{out}/data/orders.parquet")
-    cap = SF_ROWS["orders"] + LIFE_PASSES * 2 * LIFE_BATCH + 1
+    orders = copy_table(DATA, "orders", out)
+    n = orders.num_rows
+    next_key = int(pc.max(orders.column("o_orderkey")).as_py()) + 1
+    cap = next_key + LIFE_PASSES * 2 * LIFE_BATCH + 1
     model = Model(orders, cap)
-    next_key = SF_ROWS["orders"]
     keys_all = np.arange(cap)
     ops = []
 
     def live_keys():
         return np.nonzero(model.present)[0]
 
-    def batch_rows(size, share):
+    def batch(size, share):
+        """A write batch: `share` of its keys live, the rest new; every
+        other column taken from randomly drawn sf0.1 orders rows."""
         nonlocal next_key
-        live = live_keys()
         n_upd = int(size * share)
-        upd = np.sort(rng.choice(live, n_upd, replace=False))
+        upd = np.sort(rng.choice(live_keys(), n_upd, replace=False))
         ins = np.arange(next_key, next_key + size - n_upd)
         next_key += size - n_upd
         keys = np.concatenate([upd, ins])
-        status = np.where(np.isin(keys, upd), model.status[keys],
-                          rng.integers(0, 3, keys.size)).astype(np.int8)
-        cents = rng.integers(100000, 50000000, keys.size).astype(np.int64)
-        return keys, status, cents
-
-    def batch_table(keys, status, cents, extra=None):
-        cols = {
-            "o_orderkey": keys.astype(np.int64),
-            "o_custkey": rng.integers(0, 15000, keys.size).astype(np.int64),
-            "o_orderstatus": np.array(Model.STATUS, dtype=object)[status],
-            "o_totalprice": cents / 100.0,
-            "o_orderdate": day_ts(rng, keys.size, "1995-01-01",
-                                  "2001-08-02"),
-            "o_orderpriority": pick(rng, ["1-URGENT", "2-HIGH", "3-MEDIUM",
-                                          "4-NOT SPECIFIED", "5-LOW"],
-                                    keys.size),
-            "bucket": (keys % LIFE_BUCKETS).astype(np.int32)}
-        cols.update(extra or {})
-        return pa.table(cols)
+        t = orders.take(pa.array(rng.integers(0, n, size)))
+        t = t.set_column(t.schema.get_field_index("o_orderkey"),
+                         "o_orderkey", pa.array(keys, pa.int64()))
+        t = t.append_column("bucket", pa.array(
+            (keys % LIFE_BUCKETS).astype(np.int32)))
+        return t, keys, status_of(t), cents_of(t)
 
     def key_window(share):
         """[lo, hi] over the key space holding about `share` of live rows."""
@@ -274,17 +155,15 @@ def lifecycle(rng, out):
                 op.update({"method": method,
                            "keep": LIFE_KEEP, "after": model.digest()})
             elif kind == "upsert":
-                keys, st, cents = batch_rows(LIFE_BATCH, LIFE_UPDATE_SHARE)
-                write(batch_table(keys, st, cents),
-                      f"{out}/batches/{i}.parquet")
+                t, keys, st, cents = batch(LIFE_BATCH, LIFE_UPDATE_SHARE)
+                write(t, f"{out}/batches/{i}.parquet")
                 model.present[keys] = True
                 model.cents[keys] = cents
                 model.status[keys] = st
             elif kind == "sql_merge":
-                keys, st, cents = batch_rows(LIFE_BATCH // 2, 0.5)
-                old = model.present[keys]
-                dele = old & (rng.random(keys.size) < 0.2)
-                write(batch_table(keys, st, cents, {"del": dele}),
+                t, keys, st, cents = batch(LIFE_BATCH // 2, 0.5)
+                dele = model.present[keys] & (rng.random(keys.size) < 0.2)
+                write(t.append_column("del", pa.array(dele)),
                       f"{out}/batches/{i}.parquet")
                 keep = ~dele
                 model.present[keys[keep]] = True
@@ -329,78 +208,122 @@ def lifecycle(rng, out):
                      "predicate_selectivity": LIFE_SELECTIVITY,
                      "maintenance_every_commits": LIFE_COMMITS_PER_PASS,
                      "vacuum_keep_versions": LIFE_KEEP,
-                     "table_rows_at_start": SF_ROWS["orders"],
+                     "table_rows_at_start": n,
                      "partitions": LIFE_BUCKETS}}
 
 
 # ---------------------------------------------------------------- llm_dedup
 
+def replicate(t, key, k):
+    """k copies of table t, copy r with `key` offset by r * DEDUP_OFFSET."""
+    ki = t.schema.get_field_index(key)
+    return pa.concat_tables([
+        t.set_column(ki, key, pc.add(t.column(key), r * DEDUP_OFFSET))
+        for r in range(k)])
+
+
+def clusters(ids, links):
+    """Union-find over ids; return every pair (a < b) in one cluster."""
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+    for a, b in links:
+        parent[find(a)] = find(b)
+    groups = {}
+    for i in ids:
+        groups.setdefault(find(i), []).append(i)
+    return sorted((a, b) for g in groups.values() if len(g) > 1
+                  for x, a in enumerate(sorted(g)) for b in sorted(g)[x + 1:])
+
+
 def dedup_corpus(rng, out):
-    nd = SF_ROWS["documents"] * DEDUP_K
-    off = 10_000_000
-    # k replicas of the documents table with key offsets; text is drawn
-    # fresh per replica so replicas do not collapse into one dup group
-    blocks = [documents_table(rng, SF_ROWS["documents"], r * off)
-              for r in range(DEDUP_K)]
-    base = pa.concat_tables(blocks)
+    base = replicate(copy_table(DATA, "documents", out), "doc_id", DEDUP_K)
     text = base.column("text").to_pylist()
     ids = base.column("doc_id").to_numpy()
+    nd = base.num_rows
     n_plant = int(nd * DEDUP_SHARE)
+    pid0 = DEDUP_K * DEDUP_OFFSET
     # sources are distinct docs long enough (>= 24 words) that one edit
     # keeps the planted copy a near-duplicate under 3-word shingling
     long_docs = np.nonzero(base.column("n_chars").to_numpy() >= 24 * 5)[0]
     src = rng.choice(long_docs, 2 * n_plant, replace=False)
-    exact_src, near_src = src[:n_plant], src[n_plant:]
-    plant_text, plant_pairs, exact_pairs = [], [], []
-    pid = DEDUP_K * off
-    for s in exact_src:
-        plant_text.append(text[s])
-        exact_pairs.append((int(ids[s]), pid))
-        pid += 1
-    for s in near_src:
+    plant_text = [text[s] for s in src[:n_plant]]
+    for s in src[n_plant:]:
         toks = text[s].split(" ")
         for _ in range(max(1, len(toks) // 40)):
             toks[int(rng.integers(0, len(toks)))] = "vary"
         plant_text.append(" ".join(toks))
-        plant_pairs.append((int(ids[s]), pid))
-        pid += 1
-    planted = documents_table(rng, len(plant_text), DEDUP_K * off,
-                              plant_text)
+    # a planted copy keeps its source's language and source tag
+    planted = base.take(pa.array(src))
+    for col, v in (("doc_id", np.arange(pid0, pid0 + src.size)),
+                   ("text", plant_text),
+                   ("n_chars", [len(x) for x in plant_text])):
+        planted = planted.set_column(planted.schema.get_field_index(col),
+                                     col, pa.array(v, base.schema.field(
+                                         col).type))
     docs = pa.concat_tables([base, planted])
     write(docs, f"{out}/corpus/documents.parquet")
-    write(docs.slice(0, 200), f"{out}/corpus_small/documents.parquet")
-    # exact-dedup truth: the smallest id of every distinct text
-    first = {}
-    for d, tx in zip(docs.column("doc_id").to_pylist(),
-                     docs.column("text").to_pylist()):
-        h = hashlib.md5(tx.encode()).hexdigest()
-        first[h] = min(first.get(h, d), d)
 
-    nv = SF_ROWS["embeddings"] * DEDUP_K
-    emb = pa.concat_tables([embeddings_table(rng, SF_ROWS["embeddings"],
-                                             r * off)
-                            for r in range(DEDUP_K)])
+    # truth: docs with one text, the corpus's own "<text> dup" copies and
+    # the planted copies form duplicate clusters
+    all_ids = docs.column("doc_id").to_pylist()
+    all_text = docs.column("text").to_pylist()
+    first = {}
+    for d, tx in zip(all_ids, all_text):
+        first.setdefault(tx, d)
+    links = [(first[tx], d) for d, tx in zip(all_ids, all_text)]
+    links += [(first[tx[:-4]], d) for d, tx in zip(all_ids, all_text)
+              if tx.endswith(" dup") and tx[:-4] in first]
+    links += [(int(ids[s]), pid0 + j) for j, s in enumerate(src)]
+    exact = {}
+    for d, tx in zip(all_ids, all_text):
+        h = hashlib.md5(tx.encode()).hexdigest()
+        exact[h] = min(exact.get(h, d), d)
+
+    emb = replicate(copy_table(DATA, "embeddings", out), "vec_id", DEDUP_K)
     vecs = np.stack(emb.column("embedding").to_numpy(zero_copy_only=False))
+    nv = emb.num_rows
     nvp = int(nv * DEDUP_SHARE)
     vsrc = rng.choice(nv, nvp, replace=False)
-    noise = rng.standard_normal((nvp, 64)).astype(np.float32) * 0.02
-    pv = (vecs[vsrc] + noise).astype(np.float32)
+    noise = rng.standard_normal((nvp, vecs.shape[1])).astype(np.float32)
+    pv = (vecs[vsrc] + noise * 0.02).astype(np.float32)
     vids = emb.column("vec_id").to_numpy()
-    vec_pairs = [(int(vids[s]), DEDUP_K * off + j)
-                 for j, s in enumerate(vsrc)]
-    embs = pa.concat_tables([emb, embeddings_table(rng, nvp, DEDUP_K * off,
-                                                   pv)])
+    vec_pairs = [(int(vids[s]), pid0 + j) for j, s in enumerate(vsrc)]
+    pemb = emb.take(pa.array(vsrc))
+    pemb = pemb.set_column(0, "vec_id", pa.array(
+        np.arange(pid0, pid0 + nvp), pa.int64()))
+    pemb = pemb.set_column(1, "embedding", pa.FixedSizeListArray.from_arrays(
+        pa.array(pv.reshape(-1), pa.float32()), vecs.shape[1]).cast(
+        emb.schema.field("embedding").type))
+    embs = pa.concat_tables([emb, pemb])
     write(embs, f"{out}/corpus/embeddings.parquet")
-    write(embs.slice(0, 150), f"{out}/corpus_small/embeddings.parquet")
-    return {"exact_ids": sorted(first.values()),
-            "dup_pairs": sorted(plant_pairs + exact_pairs),
+    builtin = sum(tx.endswith(" dup") for tx in all_text[:nd])
+    return {"exact_ids": sorted(exact.values()),
+            "dup_pairs": clusters(all_ids, links),
             "vec_pairs": sorted(vec_pairs),
             "dims": {"corpus_k": DEDUP_K, "documents": docs.num_rows,
                      "embeddings": embs.num_rows,
                      "planted_dup_share": DEDUP_SHARE,
                      "planted_near_dup_docs": n_plant,
                      "planted_exact_dup_docs": n_plant,
+                     "corpus_dup_token_docs": builtin,
                      "planted_near_dup_vectors": nvp}}
+
+
+def analytic_tables(out):
+    src = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not src:
+        raise SystemExit("perfbench: analytic_mix reads the sf0.1 tables "
+                         "from $SPARK_GRAFT_SF_DIR; set it")
+    for name in TPCH:
+        t = copy_table(src, name, out)
+        # a small slice of every table for set-up's warm-up pass
+        write(t.slice(0, max(25, t.num_rows // 100)),
+              f"{out}/data_small/{name}.parquet")
 
 
 def generate(workload, seed, out):
@@ -408,11 +331,7 @@ def generate(workload, seed, out):
     os.makedirs(out, exist_ok=True)
     plan = {"workload": workload, "seed": seed}
     if workload == "analytic_mix":
-        for name, t in tpch_tables(rng).items():
-            write(t, f"{out}/data/{name}.parquet")
-            # a small slice of every table for set-up's warm-up pass
-            write(t.slice(0, max(25, t.num_rows // 100)),
-                  f"{out}/data_small/{name}.parquet")
+        analytic_tables(out)
     elif workload == "table_lifecycle":
         plan.update(lifecycle(rng, out))
     elif workload == "llm_dedup":

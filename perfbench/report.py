@@ -10,7 +10,7 @@ import math
 import os
 import statistics
 
-TAIL_LADDER = (99.9, 99.0, 95.0, 90.0, 75.0, 50.0)
+TAIL_LADDER = (99.9, 99.0, 95.0, 90.0, 75.0)
 TAIL_BEYOND = 10
 
 
@@ -25,13 +25,14 @@ def percentile(values, p):
 
 def tail(values):
     """(value, percentile, n): the highest percentile in TAIL_LADDER with at
-    least TAIL_BEYOND samples beyond it. With fewer than 2*TAIL_BEYOND
-    samples no percentile qualifies and the median stands in (p50)."""
+    least TAIL_BEYOND samples beyond it. With fewer samples than p75 needs
+    (40) no percentile qualifies and the value is None: a tail is never
+    the median."""
     n = len(values)
     for p in TAIL_LADDER:
         if n * (100.0 - p) / 100.0 >= TAIL_BEYOND - 1e-9:
             return percentile(values, p), p, n
-    return statistics.median(values), 50.0, n
+    return None, None, n
 
 
 def quartiles(values):
@@ -117,7 +118,11 @@ def lifecycle_expected_final(plan, ops):
 
 
 def check_lifecycle_op(plan_op, op):
-    """'' when a read op returned what the model holds, else why not."""
+    """'' when a read op returned what the model holds and maintenance
+    kept the table's properties, else why not."""
+    if plan_op["kind"] == "maintain" and op["extra"].get("props_lost"):
+        return (f"table property {op['extra']['props_lost']} lost by "
+                f"maintenance (vacuum)")
     if plan_op["kind"] not in ("read", "time_travel", "history"):
         return ""
     got = op["extra"].get("digest")
@@ -218,7 +223,8 @@ def timing(out, name, values):
         return
     out[f"{name}_p50_s"] = (statistics.median(values), "s", None)
     v, p, n = tail(values)
-    out[f"{name}_tail_s"] = (v, "s", f"p{p:g}, n={n}")
+    out[f"{name}_tail_s"] = (v, "s", f"p{p:g}, n={n}" if v is not None
+                             else f"n={n}, a tail needs 40 samples")
 
 
 def end_to_end(raw, failed_ops, extra):
@@ -226,8 +232,11 @@ def end_to_end(raw, failed_ops, extra):
     to the workload."""
     ops = [o for o in raw["ops"] if not o["traced"]]
     out = {}
-    out["setup_s"] = (statistics.median(s["total_s"] for s in raw["setups"]),
-                      "s", f"median of {len(raw['setups'])} set-ups")
+    st = raw["setup"]
+    out["setup_s"] = (st["total_s"], "s", "process start to first timed op: "
+                      + ", ".join(f"{k[:-2]} {st[k]:.2f}" for k in (
+                          "jvm_s", "session_s", "bootstrap_s", "warmup_s",
+                          "jit_settle_s")))
     walls = [p["wall_s"] for p in raw["passes"] if not p["traced"]]
     out["wall_s"] = (statistics.median(walls), "s",
                      f"median of {len(walls)} passes")
@@ -248,7 +257,8 @@ def end_to_end(raw, failed_ops, extra):
     if raw["workload"] == "llm_dedup":
         for k in ("dup_recall", "dup_precision"):
             if k in extra:
-                out[k] = (extra[k], "ratio", "against planted pairs")
+                out[k] = (extra[k], "ratio",
+                          "against the corpus's and the planted pairs")
     return out
 
 
@@ -317,8 +327,9 @@ def per_layer(raw, plan, gen_s):
 
     # setup
     med = statistics.median
-    for k in ("session_s", "warmup_s", "bootstrap_s"):
-        put(f"setup.{k}", med(s[k] for s in raw["setups"]), "s")
+    for k in ("jvm_s", "session_s", "warmup_s", "bootstrap_s",
+              "jit_settle_s"):
+        put(f"setup.{k}", raw["setup"][k], "s")
     put("setup.input_gen_s", gen_s, "s", "not part of setup_s")
     # spark
     put("spark.jobs_per_op", len(jobs) / n, "count")
@@ -350,7 +361,7 @@ def per_layer(raw, plan, gen_s):
     # jvm
     put("jvm.gc_pause_s", raw["gc_timed_s"] / max(1, len(raw["passes"])),
         "s", "per pass")
-    put("jvm.jit_s", raw["setup_jit_s"], "s", "during set-up")
+    put("jvm.jit_s", raw["setup_jit_s"], "s", "process start to first op")
     # engine: driver-side filesystem calls (client and stream threads)
     def fs(o, kinds=None, origins=("client", "stream")):
         return sum(v for org in origins for k, v in o["fs"][org].items()

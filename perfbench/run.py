@@ -135,11 +135,6 @@ def summarise(raw, plan, work, gen_s, trace):
         lines.append(f"FAILED op {i} ({ops[i]['kind']}): {r}")
     for k, r in sorted(failed_final.items()):
         lines.append(f"FAILED check {k}: {r}")
-    dropped = sum(o["extra"].get("defect_props_dropped", 0) for o in ops)
-    if dropped:
-        lines.append(f"KNOWN DEFECT: vacuum dropped the table's keyCol "
-                     f"property {dropped} time(s); the client declared it "
-                     f"again so later SQL MERGEs could run")
     if trace:
         table = report.per_layer(raw, plan, gen_s)
         if "ann_recall" in extra:
@@ -151,15 +146,17 @@ def summarise(raw, plan, work, gen_s, trace):
         names = listed_metrics("end_to_end")
     for k in sorted(table):
         v, unit, note = table[k]
-        lines.append(f"{k:40s} {v:14.6f} {unit}" +
+        lines.append(f"{k:40s} " + ("n/a".rjust(14) if v is None else
+                                     f"{v:14.6f}") + f" {unit}" +
                      (f"  [{note}]" if note else ""))
     attempted = len(ops) + len(final)
     failed = len(reasons) + len(failed_final)
     result = {"correct": failed == 0, "attempted": attempted,
               "failed": failed,
               "metrics": {k: {"value": table[k][0], "unit": table[k][1]}
-                          for k in names if k in table}}
-    missing = [k for k in names if k not in table]
+                          for k in names if table.get(k, (None,))[0]
+                          is not None}}
+    missing = [k for k in names if k not in result["metrics"]]
     if missing:
         lines.append("MISSING metrics: " + ", ".join(missing))
         result["correct"] = False

@@ -11,15 +11,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One closed-loop client driving the engine through its public functions
-  * and `spark.sql`. Runs set-up several times, then the workload's seeded
-  * op sequence for a fixed number of seconds, and writes every raw sample
-  * as JSON for `run.py` to check and summarise.
+  * and `spark.sql`. Sets up once, runs the workload's seeded op sequence
+  * for a fixed number of seconds, and writes every raw sample as JSON for
+  * `run.py` to check and summarise.
   *
   *   Main <workload> <seed> <seconds> <trace 0|1> <work dir> <out json>
   */
 object Main {
-  val SetupReps = 3
-
   final case class Op(i: Int, pass: Int, traced: Boolean, kind: String,
                       family: String, startMs: Double, endMs: Double,
                       ok: Boolean, err: String,
@@ -52,9 +50,12 @@ object Main {
   trait Workload {
     def passLen: Int
     /** Standing state the timed ops need (tables, streams). */
-    def bootstrap(s: SparkSession, rep: Int): Unit
+    def bootstrap(s: SparkSession): Unit
     def warmup(s: SparkSession): Unit
     def op(s: SparkSession, pass: Int, c: OpCtx): Unit
+    /** Client work after op `c` that is not part of it: output checks
+      * and the client's answers to what they find. Not timed or traced. */
+    def afterOp(s: SparkSession, c: OpCtx): Unit = ()
     /** Stop what bootstrap started. */
     def teardown(s: SparkSession): Unit
     /** Values the checks need, gathered after the timed phase. */
@@ -97,27 +98,25 @@ object Main {
       s
     }
 
-    // ---- set-up, several times; the last one stays up for the timed ops
-    val setups = mutable.ArrayBuffer.empty[Map[String, Double]]
-    val jit0 = jit.getTotalCompilationTime
-    for (rep <- 1 to SetupReps) {
-      val t0 = System.nanoTime()
-      spark = session()
-      val t1 = System.nanoTime()
-      w.bootstrap(spark, rep)
-      val t2 = System.nanoTime()
-      w.warmup(spark)
-      val t3 = System.nanoTime()
-      val before = if (rep == 1) (mainMs - jvmStartMs) / 1e3 else 0.0
-      setups += Map("jvm_s" -> before, "session_s" -> (t1 - t0) / 1e9,
-        "bootstrap_s" -> (t2 - t1) / 1e9, "warmup_s" -> (t3 - t2) / 1e9,
-        "total_s" -> (before + (t3 - t0) / 1e9))
-      if (rep < SetupReps) { w.teardown(spark); spark.stop() }
-    }
-    val setupJitS = (jit.getTotalCompilationTime - jit0) / 1e3
+    // ---- set-up: process start to the first timed op
+    val t0 = System.nanoTime()
+    spark = session()
+    val t1 = System.nanoTime()
+    w.bootstrap(spark)
+    val t2 = System.nanoTime()
+    w.warmup(spark)
+    val t3 = System.nanoTime()
+    settleJit()
+    val t4 = System.nanoTime()
+    val setupJitS = jit.getTotalCompilationTime / 1e3
+    val setup = Map("jvm_s" -> (mainMs - jvmStartMs) / 1e3,
+      "session_s" -> (t1 - t0) / 1e9, "bootstrap_s" -> (t2 - t1) / 1e9,
+      "warmup_s" -> (t3 - t2) / 1e9, "jit_settle_s" -> (t4 - t3) / 1e9,
+      "total_s" -> (System.currentTimeMillis() - jvmStartMs) / 1e3)
 
     // ---- timed phase: one client, closed loop, whole passes until the
-    // time is up, so every run measures the same mix of ops
+    // time is up, so every run measures the same mix of ops; a pass's
+    // wall time is the sum of its ops' times
     val heapMb = mutable.ArrayBuffer(liveHeapMb())
     val ops = mutable.ArrayBuffer.empty[Op]
     val passes = mutable.ArrayBuffer.empty[Map[String, Any]]
@@ -135,7 +134,7 @@ object Main {
       val traced = trace && pass % 2 == 1
       if (traced) tracer.attach() else tracer.detach()
       val g0 = gcMs()
-      val p0 = System.nanoTime()
+      var passS = 0.0
       var k = 0
       while (k < w.passLen) {
         val c = new OpCtx(i, tracer)
@@ -151,12 +150,14 @@ object Main {
                 .take(300) }
         val t1 = tracer.nowMs()
         spark.sparkContext.clearJobGroup()
+        val fs = FsCounts.delta(f0, FsCounts.snapshot())
+        passS += (t1 - t0) / 1e3
+        tracer.currentOp = -1
+        if (err.isEmpty) w.afterOp(spark, c)
         ops += Op(i, pass, traced, c.kind, c.family, t0, t1, err.isEmpty,
-          err, c.verbs.toSeq, c.extra.toMap,
-          FsCounts.delta(f0, FsCounts.snapshot()))
+          err, c.verbs.toSeq, c.extra.toMap, fs)
         i += 1; k += 1
       }
-      val passS = (System.nanoTime() - p0) / 1e9
       gcTimedS += (gcMs() - g0) / 1e3
       passes += Map("pass" -> pass, "ops" -> k, "traced" -> traced,
         "wall_s" -> passS)
@@ -175,7 +176,7 @@ object Main {
 
     val raw = Map(
       "workload" -> workload, "seed" -> seed, "cpus" -> cpus,
-      "setups" -> setups.toSeq, "setup_jit_s" -> setupJitS,
+      "setup" -> setup, "setup_jit_s" -> setupJitS,
       "timed_s" -> timedS, "gc_timed_s" -> gcTimedS,
       "live_heap_mb" -> heapMb.toSeq,
       "passes" -> passes.toSeq,
@@ -204,6 +205,20 @@ object Main {
         "start_ms" -> e.startMs, "dur_ms" -> e.durMs, "rows" -> e.rows)).toSeq,
       "results" -> results)
     Files.writeString(Paths.get(out), Json.render(raw))
+  }
+
+  /** Wait, at most 10 s, until the JIT has drained its compile queue (its
+    * total compile time stops growing for half a second), so that set-up's
+    * lazy work ends before timing starts instead of competing with the
+    * first timed ops for the cores. */
+  def settleJit(): Unit = {
+    val jit = ManagementFactory.getCompilationMXBean
+    val end = System.nanoTime() + 10000000000L
+    var last = -1L
+    while (jit.getTotalCompilationTime != last && System.nanoTime() < end) {
+      last = jit.getTotalCompilationTime
+      Thread.sleep(500)
+    }
   }
 
   /** Old-generation bytes in use right after a full collection. */
@@ -246,7 +261,7 @@ class AnalyticMix(work: String, seed: Long) extends Main.Workload {
   val passLen = names.size
   private val data = s"$work/data"
 
-  def bootstrap(s: SparkSession, rep: Int): Unit = ()
+  def bootstrap(s: SparkSession): Unit = ()
   def warmup(s: SparkSession): Unit =
     names.foreach(n => fns(n)(s, s"$work/data_small").count())
   def op(s: SparkSession, pass: Int, c: Main.OpCtx): Unit = {
@@ -291,9 +306,8 @@ class TableLifecycle(work: String, plan: JsonNode) extends Main.Workload {
   private val versionAfter = mutable.HashMap.empty[Int, Long]
   private var commits = 0
 
-  def bootstrap(s: SparkSession, rep: Int): Unit = {
-    root = s"$work/run/rep$rep"
-    versionAfter.clear(); commits = 0
+  def bootstrap(s: SparkSession): Unit = {
+    root = s"$work/run"
     val orders = s.read.parquet(s"$work/data/orders.parquet")
       .withColumn(Part, pmod(col(Key), lit(8)).cast("int"))
     MergeOps.mergeUpsert(s, src, orders, Key, Part, statsKeys = StatsKeys,
@@ -311,18 +325,40 @@ class TableLifecycle(work: String, plan: JsonNode) extends Main.Workload {
     q.processAllAvailable()
   }
 
-  /** One of each call, content-neutral: the upsert rewrites rows with
-    * the values they already hold. */
+  /** Each write kind at full batch size and each read, content-neutral:
+    * the writes rewrite rows with the values they already hold. */
   def warmup(s: SparkSession): Unit = {
-    MergeOps.mergeUpsert(s, src, s.read.parquet(s"$work/data/orders.parquet")
-        .limit(200).withColumn(Part, pmod(col(Key), lit(8)).cast("int")),
-      Key, Part, statsKeys = StatsKeys, dictKeys = DictKeys)
+    val same = s.read.parquet(s"$work/data/orders.parquet").limit(2000)
+      .withColumn(Part, pmod(col(Key), lit(8)).cast("int"))
+    MergeOps.mergeUpsert(s, src, same, Key, Part, statsKeys = StatsKeys,
+      dictKeys = DictKeys)
+    q.processAllAvailable()
+    MergeOps.mergeUpdateWhere(s, src, col(Key).between(0L, 1500L),
+      Seq("o_totalprice" -> col("o_totalprice")), Key, Part,
+      statsKeys = StatsKeys, dictKeys = DictKeys)
+    q.processAllAvailable()
+    same.limit(1000).withColumn("del", lit(false))
+      .createOrReplaceTempView("lc_batch")
+    s.sql(MergeSql)
     q.processAllAvailable()
     digest(MergeOps.readCorpusSkipPruned(s, src, Part,
       ranges = Seq((Key, 0L, 1000L)), values = Seq("o_orderstatus" -> Seq("O"))))
     digest(Versioned.readVersion(s, src, 1L, Some(Part)))
+    MergeOps.history(s, src, Part).collect()
     versionAfter(-1) = Versioned.currentVersion(s, src).get
   }
+
+  private val MergeSql =
+    s"""MERGE INTO graft.$Table t USING lc_batch b ON t.$Key = b.$Key
+       |WHEN MATCHED AND b.del THEN DELETE
+       |WHEN MATCHED THEN UPDATE SET o_custkey = b.o_custkey,
+       |  o_orderstatus = b.o_orderstatus, o_totalprice = b.o_totalprice,
+       |  o_orderdate = b.o_orderdate, o_orderpriority = b.o_orderpriority
+       |WHEN NOT MATCHED THEN INSERT (o_orderkey, o_custkey,
+       |  o_orderstatus, o_totalprice, o_orderdate, o_orderpriority,
+       |  bucket) VALUES (b.o_orderkey, b.o_custkey, b.o_orderstatus,
+       |  b.o_totalprice, b.o_orderdate, b.o_orderpriority, b.bucket)
+       |""".stripMargin
 
   private def digest(df: DataFrame): Map[String, Long] = {
     val r = df.agg(count(lit(1)), coalesce(sum(col(Key)), lit(0L)),
@@ -364,17 +400,7 @@ class TableLifecycle(work: String, plan: JsonNode) extends Main.Workload {
           statsKeys = StatsKeys, dictKeys = DictKeys)))
       case "sql_merge" =>
         batch().createOrReplaceTempView("lc_batch")
-        commit(c)(c.call("sql", "merge_into")(s.sql(
-          s"""MERGE INTO graft.$Table t USING lc_batch b ON t.$Key = b.$Key
-             |WHEN MATCHED AND b.del THEN DELETE
-             |WHEN MATCHED THEN UPDATE SET o_custkey = b.o_custkey,
-             |  o_orderstatus = b.o_orderstatus, o_totalprice = b.o_totalprice,
-             |  o_orderdate = b.o_orderdate, o_orderpriority = b.o_orderpriority
-             |WHEN NOT MATCHED THEN INSERT (o_orderkey, o_custkey,
-             |  o_orderstatus, o_totalprice, o_orderdate, o_orderpriority,
-             |  bucket) VALUES (b.o_orderkey, b.o_custkey, b.o_orderstatus,
-             |  b.o_totalprice, b.o_orderdate, b.o_orderpriority, b.bucket)
-             |""".stripMargin)))
+        commit(c)(c.call("sql", "merge_into")(s.sql(MergeSql)))
       case "maintain" =>
         commit(c) {
           if (p.get("method").asText == "zorder")
@@ -385,15 +411,6 @@ class TableLifecycle(work: String, plan: JsonNode) extends Main.Workload {
             Part, maxFilesPerPart = 1, sortCol = Some(Key)))
           c.call("engine", "vacuum")(Versioned.vacuum(s, src,
             keepVersions = p.get("keep").asInt))
-          // Known defect: vacuum sweeps the version that carries the
-          // table properties, so SQL MERGE loses its merge key. Report it
-          // and declare the key again, so later SQL writes can run.
-          if (!Versioned.tableProps(s, src, Versioned.currentVersion(s, src)
-                .get).contains("keyCol")) {
-            c.extra("defect_props_dropped") = 1
-            c.call("sql", "set_tblproperties")(s.sql(
-              s"ALTER TABLE graft.$Table SET TBLPROPERTIES('keyCol'='$Key')"))
-          }
         }
       case "read" =>
         val sts = p.get("status").elements.asScala.map(_.asText).toSeq
@@ -413,6 +430,18 @@ class TableLifecycle(work: String, plan: JsonNode) extends Main.Workload {
         c.extra("digest") = Map("rows" -> h.last.getAs[Long]("n_rows"))
     }
   }
+
+  /** Maintenance must keep the table's properties. When it loses the
+    * merge key, the op's check fails (`run.py` counts it) and the client
+    * declares the key again, untimed, so later SQL MERGEs can run. */
+  override def afterOp(s: SparkSession, c: Main.OpCtx): Unit =
+    if (c.kind == "maintain" &&
+        !Versioned.tableProps(s, src, Versioned.currentVersion(s, src).get)
+          .get("keyCol").contains(Key)) {
+      c.extra("props_lost") = "keyCol"
+      s.sql(s"ALTER TABLE graft.$Table SET TBLPROPERTIES('keyCol'='$Key')")
+      q.processAllAvailable()
+    }
 
   def teardown(s: SparkSession): Unit = if (q != null) { q.stop(); q = null }
 
@@ -456,9 +485,11 @@ class LlmDedup(work: String) extends Main.Workload {
     "text_tfidf" -> TextOps.textTfidf _)
   val passLen = steps.size
 
-  def bootstrap(s: SparkSession, rep: Int): Unit = ()
+  def bootstrap(s: SparkSession): Unit = ()
+  /** Every step once on the full corpus, as the timed ops run it. */
   def warmup(s: SparkSession): Unit =
-    steps.foreach { case (_, f) => f(s, s"$work/corpus_small").count() }
+    steps.foreach { case (name, f) => f(s, s"$work/corpus").write
+      .mode("overwrite").parquet(s"$work/warm/$name") }
   def op(s: SparkSession, pass: Int, c: Main.OpCtx): Unit = {
     val (name, f) = steps(c.i % passLen)
     c.kind = name; c.family = name

@@ -45,6 +45,36 @@ class GeneratorTest(unittest.TestCase):
             gen.generate("llm_dedup", 12, b)
             self.assertNotEqual(tree_digest(a), tree_digest(b))
 
+    def test_tables_are_the_sf01_tables(self):
+        with tempfile.TemporaryDirectory() as d:
+            gen.generate("table_lifecycle", 11, d)
+            with open(os.path.join(d, "data", "orders.parquet"), "rb") as a, \
+                    open(os.path.join(gen.DATA, "orders.parquet"), "rb") as b:
+                self.assertEqual(a.read(), b.read())
+
+    def test_dedup_truth_holds_the_corpus_and_planted_pairs(self):
+        import pyarrow.parquet as pq
+        with tempfile.TemporaryDirectory() as d:
+            plan = gen.generate("llm_dedup", 11, d)
+            docs = pq.read_table(
+                os.path.join(d, "corpus", "documents.parquet"))
+        text = dict(zip(docs.column("doc_id").to_pylist(),
+                        docs.column("text").to_pylist()))
+        pairs = {tuple(p) for p in plan["dup_pairs"]}
+        # the corpus's own "<text> dup" copies are in the truth
+        base = {t: i for i, t in text.items() if i < gen.DEDUP_OFFSET}
+        own = [(base[t[:-4]], i) for i, t in text.items()
+               if t.endswith(" dup") and t[:-4] in base]
+        self.assertTrue(own)
+        for a, b in own:
+            self.assertIn((min(a, b), max(a, b)), pairs)
+        # every planted doc pairs with its source
+        planted = [i for i in text if i >= gen.DEDUP_OFFSET]
+        self.assertEqual(len(planted),
+                         2 * plan["dims"]["planted_near_dup_docs"])
+        for i in planted:
+            self.assertTrue(any(b == i for _, b in pairs), i)
+
     def test_lifecycle_passes_hold_the_same_mix(self):
         with tempfile.TemporaryDirectory() as d:
             plan = gen.generate("table_lifecycle", 3, d)
@@ -66,6 +96,13 @@ class ChecksCatchWrongResultsTest(unittest.TestCase):
         bad = {"extra": {"digest": dict(plan_op["expect"], cents_sum=901)}}
         self.assertEqual(report.check_lifecycle_op(plan_op, good), "")
         self.assertNotEqual(report.check_lifecycle_op(plan_op, bad), "")
+
+    def test_maintenance_that_loses_a_table_property_fails(self):
+        plan_op = {"kind": "maintain", "after": {"rows": 1}}
+        self.assertEqual(report.check_lifecycle_op(plan_op, {"extra": {}}),
+                         "")
+        self.assertNotEqual(report.check_lifecycle_op(
+            plan_op, {"extra": {"props_lost": "keyCol"}}), "")
 
     def test_lifecycle_final_mirror_drift_fails(self):
         plan = {"initial": {"rows": 1}, "ops": [
@@ -105,8 +142,8 @@ class ChecksCatchWrongResultsTest(unittest.TestCase):
 
 class TailRuleTest(unittest.TestCase):
     def test_highest_percentile_with_ten_samples_beyond(self):
-        for n, p in ((20, 50.0), (39, 50.0), (40, 75.0), (100, 90.0),
-                     (200, 95.0), (1000, 99.0), (10000, 99.9)):
+        for n, p in ((40, 75.0), (99, 75.0), (100, 90.0), (200, 95.0),
+                     (1000, 99.0), (10000, 99.9)):
             _, got, count = report.tail(list(range(n)))
             self.assertEqual((got, count), (p, n), n)
 
@@ -117,9 +154,9 @@ class TailRuleTest(unittest.TestCase):
         self.assertEqual(v, 90)
         self.assertEqual(sum(x > v for x in xs), 10)
 
-    def test_small_sample_falls_back_to_the_median(self):
-        v, p, n = report.tail([3.0, 1.0, 2.0])
-        self.assertEqual((v, p, n), (2.0, 50.0, 3))
+    def test_small_sample_has_no_tail(self):
+        for n in (3, 20, 39):
+            self.assertEqual(report.tail(list(range(n))), (None, None, n))
 
 
 if __name__ == "__main__":
