@@ -9,6 +9,7 @@ import glob
 import hashlib
 import os
 import shutil
+import signal
 import subprocess
 import sys
 
@@ -16,6 +17,25 @@ BUILD = os.path.join(".bench_build", "graftbench")
 CLASSES = os.path.join(BUILD, "classes")
 SOURCE_DIRS = [os.path.join("src", "main", "scala"),
                os.path.join("perfbench", "src")]
+
+
+def run_child(cmd, timeout=None, **kw):
+    """Run cmd to its end; return its exit code, or "timeout". On every way
+    out, a SIGTERM's SystemExit included, the child is killed and reaped
+    with plain os calls: a signal that interrupts Popen.wait can leave its
+    lock held, and a second Popen.wait would then block for ever."""
+    p = subprocess.Popen(cmd, **kw)
+    try:
+        return p.wait(timeout=timeout)
+    except subprocess.TimeoutExpired:
+        return "timeout"
+    finally:
+        if p.returncode is None:
+            try:
+                os.kill(p.pid, signal.SIGKILL)
+                os.waitpid(p.pid, 0)
+            except (ProcessLookupError, ChildProcessError):
+                pass
 
 
 def spark_jars():
@@ -59,12 +79,12 @@ def build():
         with open(argfile, "w") as f:
             f.write("\n".join(srcs) + "\n")
         cp = os.path.join(jars, "*")
-        r = subprocess.run(
+        rc = run_child(
             ["java", "-Xss8m", "-Xmx2g", "-XX:-UsePerfData", "-cp", cp,
              "scala.tools.nsc.Main",
              "-nowarn", "-d", CLASSES, "-classpath", cp, "@" + argfile],
             stdout=sys.stderr, stderr=sys.stderr)
-        if r.returncode != 0:
+        if rc != 0:
             raise SystemExit("perfbench: compile failed")
         with open(stamp, "w") as f:
             f.write(digest)

@@ -20,6 +20,7 @@ Layout:
                          expected results the checks compare against
   batches/<i>.parquet    table_lifecycle write batches
   corpus/*.parquet       llm_dedup corpus (documents, embeddings)
+  corpus_small/          llm_dedup: every fourth corpus row, for warm-up
 """
 import hashlib
 import json
@@ -301,6 +302,10 @@ def dedup_corpus(rng, out):
         emb.schema.field("embedding").type))
     embs = pa.concat_tables([emb, pemb])
     write(embs, f"{out}/corpus/embeddings.parquet")
+    # every fourth row of each table for set-up's warm-up pass
+    for name, t in (("documents", docs), ("embeddings", embs)):
+        write(t.take(pa.array(range(0, t.num_rows, 4))),
+              f"{out}/corpus_small/{name}.parquet")
     builtin = sum(tx.endswith(" dup") for tx in all_text[:nd])
     return {"exact_ids": sorted(exact.values()),
             "dup_pairs": clusters(all_ids, links),

@@ -59,17 +59,9 @@ def run_jvm(classpath, workload, seed, seconds, trace, work):
             f"-Dderby.system.home={work}", "-cp", classpath,
             "graftbench.Main", workload, str(seed), str(seconds),
             str(trace), work, out])
-    log = open(os.path.join(work, "jvm.log"), "w")
-    p = subprocess.Popen(cmd, stdout=log, stderr=subprocess.STDOUT, env=env)
-    try:
-        rc = p.wait(timeout=JVM_TIMEOUT_S)
-    except subprocess.TimeoutExpired:
-        rc = "timeout"
-    finally:  # also on SIGTERM: never leave the JVM behind
-        if p.poll() is None:
-            p.kill()
-            p.wait()
-        log.close()
+    with open(os.path.join(work, "jvm.log"), "w") as log:
+        rc = build.run_child(cmd, timeout=JVM_TIMEOUT_S, stdout=log,
+                             stderr=subprocess.STDOUT, env=env)
     if rc != 0 or not os.path.exists(out):
         with open(os.path.join(work, "jvm.log")) as f:
             sys.stderr.write(f.read()[-4000:])

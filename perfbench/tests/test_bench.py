@@ -1,10 +1,12 @@
 """Tests of the benchmark's own pieces: generator determinism, the output
-checks catching an injected wrong result, and the tail-percentile rule.
+checks catching an injected wrong result, the tail-percentile rule and
+the clean-up of child processes.
 
     python3 -m unittest discover -s perfbench/tests
 """
 import hashlib
 import os
+import signal
 import sys
 import tempfile
 import unittest
@@ -12,6 +14,7 @@ import unittest
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, os.path.dirname(HERE))
 
+import build  # noqa: E402
 import gen  # noqa: E402
 import report  # noqa: E402
 
@@ -157,6 +160,28 @@ class TailRuleTest(unittest.TestCase):
     def test_small_sample_has_no_tail(self):
         for n in (3, 20, 39):
             self.assertEqual(report.tail(list(range(n))), (None, None, n))
+
+
+class RunChildTest(unittest.TestCase):
+    def assert_no_child_left(self):
+        with self.assertRaises(ChildProcessError):
+            os.waitpid(-1, os.WNOHANG)
+
+    def test_timeout_kills_and_reaps_the_child(self):
+        self.assertEqual(build.run_child(["sleep", "30"], timeout=0.3),
+                         "timeout")
+        self.assert_no_child_left()
+
+    def test_exit_raised_inside_the_wait_kills_and_reaps_the_child(self):
+        old = signal.signal(signal.SIGALRM, lambda *_: sys.exit(143))
+        try:
+            signal.setitimer(signal.ITIMER_REAL, 0.3)
+            with self.assertRaises(SystemExit):
+                build.run_child(["sleep", "30"])
+        finally:
+            signal.setitimer(signal.ITIMER_REAL, 0)
+            signal.signal(signal.SIGALRM, old)
+        self.assert_no_child_left()
 
 
 if __name__ == "__main__":
