@@ -1700,6 +1700,17 @@ object Versioned {
       }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
+  /** A zero-row frame at the table schema, read from ONE manifest entry
+    * — the newest-staged one, whose schema is authoritative under the
+    * batch-wins evolution rule — so an all-pruned read costs one
+    * directory listing, never the per-partition walk pruning avoids. */
+  def emptyFrame(s: SparkSession, dir: String, man: Seq[(String, String)],
+                 partCol: Option[String]): DataFrame = {
+    val newest = man.maxBy(e =>
+      stageDirVersion(e._2.split("/")(1)).getOrElse(0L))
+    readEntries(s, dir, Seq(newest), partCol).limit(0)
+  }
+
   /** Union-read a set of manifest entries (see [[readCurrent]]). An empty
     * entry set is the caller's "partition absent" case — callers handle it
     * before calling (we cannot conjure a schema from nothing).
@@ -2302,38 +2313,30 @@ object Versioned {
     // refuse to time-travel (their data may be gone), so their markers,
     // manifests, and sidecars are pure growth — at a streaming fold
     // cadence the commit log would otherwise accumulate forever. One
-    // guard: the applied-batch ledger is CUMULATIVE state, and if the
-    // newest committed ledger sits below the floor (every later commit
-    // was ledgerless maintenance), deleting it would forget every
-    // applied batch id — exactly-once replay would double-count. That
-    // single version is retained whole (marker + sidecars) until a
-    // later fold writes a newer ledger above the floor. Legacy
-    // version-named sidecars are deleted here; tokenized ones fall to
-    // the ghost sweep below once their marker is gone.
-    val newestLedgerV =
-      if (!fs.exists(new Path(dir, "ledger"))) None   // ledger-less table:
-      else committed.sorted.reverse.find(w =>        // skip the O(versions)
-        scala.util.Try(committedSidecar(s, dir, w, "ledger")).toOption
-          .flatten.isDefined)                        // marker-read walk
-    val ledgerKeep = newestLedgerV.filter(_ < floor)
-    // same cumulative-metadata guard for the constraints sidecar: if the
-    // newest committed constraint set sits below the floor (every later
-    // commit was a plain write), sweeping it would silently UNCONSTRAIN
-    // the table — that version is retained whole until a newer
-    // add/dropConstraint commits above the floor
-    val newestConstraintsV =
-      if (!fs.exists(new Path(dir, "constraints"))) None
-      else committed.sorted.reverse.find(w =>
-        scala.util.Try(committedSidecar(s, dir, w, "constraints")).toOption
-          .flatten.isDefined)
-    val constraintsKeep = newestConstraintsV.filter(_ < floor)
+    // guard: the applied-batch ledger, the constraint set and the
+    // table properties are CUMULATIVE state (readers walk back to the
+    // newest committed sidecar), and if the newest one sits below the
+    // floor (every later commit was a plain write), deleting it would
+    // forget every applied batch id (exactly-once replay would
+    // double-count), unconstrain the table, or drop its properties
+    // (`keyCol`, which SQL MERGE INTO and INSERT read). That version is
+    // retained whole (marker + sidecars) until a newer one commits
+    // above the floor. Legacy version-named sidecars are deleted here;
+    // tokenized ones fall to the ghost sweep below once their marker
+    // is gone.
+    val cumulativeKeep = Seq("ledger", "constraints", "props").flatMap {
+      side =>
+        if (!fs.exists(new Path(dir, side))) None   // skip the O(versions)
+        else committed.sorted.reverse.find(w =>    // marker-read walk
+          scala.util.Try(committedSidecar(s, dir, w, side)).toOption
+            .flatten.isDefined).filter(_ < floor)
+    }.toSet
     val swept = committed
-      .filter(v => v < floor && !ledgerKeep.contains(v) &&
-        !constraintsKeep.contains(v) && !tagged(v))
+      .filter(v => v < floor && !cumulativeKeep(v) && !tagged(v))
       .toSet
     swept.foreach { v =>
       Seq("manifest", "stats", "ledger", "dv", "uv", "constraints",
-          "touch")
+          "props", "touch")
         .foreach(side => fs.delete(new Path(dir, s"$side/$v.txt"), false))
       // marker FIRST: a crash between the two deletes then leaves a
       // harmless orphaned winner file (invisible to committedVersions)
@@ -2354,7 +2357,7 @@ object Versioned {
     val tokenOf = survivors.map(cv => cv ->
       scala.util.Try(committedToken(s, dir, cv)).toOption.flatten).toMap
     Seq("manifest", "stats", "ledger", "dv", "uv", "constraints",
-        "touch")
+        "props", "touch")
       .foreach { side =>
       val root = new Path(dir, side)
       if (fs.exists(root)) fs.listStatus(root).toSeq.foreach { st =>

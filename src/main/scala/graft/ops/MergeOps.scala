@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables._
-import graft.engine.Versioned
+import graft.engine.{Skipping, Versioned}
 
 /** Batch MERGE/upsert into a partitioned parquet corpus — the write-side
   * operator every incremental pipeline needs on day one: fold a new crawl
@@ -771,9 +771,11 @@ object MergeOps {
     // the input's first possible evaluation, exactly as un-cached code
     // ordered it.
     val v0 = Versioned.currentVersion(s, corpusDir)
-    // bootstrap (no committed version) writes the batch in a single
-    // pass — materializing it would pay a cache write for no reuse
-    if (v0.isEmpty)
+    // an unconstrained bootstrap (no committed version, so no persisted
+    // constraints either) writes the batch in a single pass —
+    // materializing it would pay a cache write for no reuse; with
+    // constraints the check and the write must see one evaluation
+    if (v0.isEmpty && constraints.isEmpty)
       mergeUpsertImpl(s, corpusDir, v0, batch, keyCol, partCol, statsKey,
         statsKeys, ledgerId, dictKeys, constraints, bloomKeys)
     else withMaterialized(batch) { b =>
@@ -923,10 +925,8 @@ object MergeOps {
               if (keyStrs.size > MixedLayoutProbeCap) Nil
               else Seq((keyCol, keyStrs))
             if (kr.isEmpty && kv.isEmpty) foreign
-            else skipEntries(s, corpusDir, v, foreign, kr, kv,
-              Versioned.readStatsMulti(s, corpusDir, v),
-              Versioned.readStatsDict(s, corpusDir, v),
-              Versioned.readStatsBloom(s, corpusDir, v, Some(Set(keyCol))))
+            else Skipping.keep(s, corpusDir, v, foreign,
+              Skipping.Hints(kr, kv))
           }
         // COLLISION expansion (the foreignLayoutTouch rule): a migrated
         // candidate survivor stages into the current-spec dir of ITS
@@ -1296,155 +1296,29 @@ object MergeOps {
     Versioned.publish(s, corpusDir, nv, tok, newMan)
   }
 
-  /** Conservative pruning hints from a WHERE-verb predicate (round 17,
-    * VERDICT item 1 / guide §6 data skipping): top-level AND conjuncts
-    * that are simple `col <op> literal` comparisons or IN lists become
-    * the zone-map ranges / dictionary-bloom-name value probes
-    * [[skipEntries]] understands; every other conjunct contributes
-    * nothing. Soundness: a row where the predicate is TRUE makes every
-    * conjunct TRUE, so a partition an extracted conjunct's tier prunes
-    * provably holds no hit row — and the verbs re-evaluate the REAL
-    * predicate on every surviving partition, so hints only ever skip
-    * reads, never change results. Type discipline keeps renderings
-    * exact: range hints only for integral columns with integral
-    * literals (the zone-map tier's own contract), value hints only
-    * where the literal's string rendering equals the column's
-    * cast-to-string (strings verbatim; integrals via toString) — a
-    * double literal ("5" vs "5.0") never produces a hint. */
-  private[graft] def predPruneHints(src: DataFrame, pred: Column)
-      : (Seq[(String, Long, Long)], Seq[(String, Seq[String])]) = {
-    import org.apache.spark.sql.catalyst.expressions.{
-      And => CAnd, AttributeReference, Cast => CCast, EqualTo => CEq,
-      Expression, GreaterThan => CGt, GreaterThanOrEqual => CGte,
-      In => CIn, LessThan => CLt, LessThanOrEqual => CLte}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-    import org.apache.spark.sql.types._
-    // resolve the predicate against the source frame (driver-side
-    // analysis only, no job): the ANALYZED filter condition carries
-    // typed attributes and foldable literals, so the rendering rules
-    // below are exact by type
-    val cond =
-      try src.where(pred).queryExecution.analyzed match {
-        case f: LFilter => f.condition
-        case _ => return (Nil, Nil)
-      } catch {
-        case _: org.apache.spark.sql.AnalysisException => return (Nil, Nil)
-      }
-    def integral(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    // the attribute side: a bare column, or a type-coercion cast to a
-    // wider INTEGRAL type (the comparison then holds in the wide type,
-    // and the extracted long bound is the same bound on the column)
-    def attr(e: Expression): Option[(String, DataType)] = e match {
-      case a: AttributeReference => Some((a.name, a.dataType))
-      case c: CCast if integral(c.dataType) => c.child match {
-        case a: AttributeReference if integral(a.dataType) =>
-          Some((a.name, a.dataType))
-        case _ => None
-      }
-      case _ => None
-    }
-    def intAttr(e: Expression): Option[String] =
-      attr(e).collect { case (n, dt) if integral(dt) => n }
-    // the literal side: any foldable subtree (the analyzer wraps
-    // literals in coercion casts), evaluated driver-side
-    def fold(e: Expression): Option[Any] =
-      if (!e.foldable) None
-      else scala.util.Try(Option(e.eval(null))).toOption.flatten
-    def litLong(e: Expression): Option[Long] =
-      if (integral(e.dataType)) fold(e).map(_.asInstanceOf[Number].longValue)
-      else None
-    def litStr(e: Expression): Option[String] =
-      if (e.dataType == StringType) fold(e).map(_.toString) else None
-    val ranges = Seq.newBuilder[(String, Long, Long)]
-    val values = Seq.newBuilder[(String, Seq[String])]
-    def walk(e: Expression): Unit = e match {
-      case CAnd(l, r) => walk(l); walk(r)
-      // each comparison handles both operand orders: `col > lit` bounds
-      // below, `lit > col` bounds above
-      case CGt(x, y) =>
-        for (c <- intAttr(x); n <- litLong(y) if n < Long.MaxValue)
-          ranges += ((c, n + 1, Long.MaxValue))
-        for (c <- intAttr(y); n <- litLong(x) if n > Long.MinValue)
-          ranges += ((c, Long.MinValue, n - 1))
-      case CGte(x, y) =>
-        for (c <- intAttr(x); n <- litLong(y))
-          ranges += ((c, n, Long.MaxValue))
-        for (c <- intAttr(y); n <- litLong(x))
-          ranges += ((c, Long.MinValue, n))
-      case CLt(x, y) =>
-        for (c <- intAttr(x); n <- litLong(y) if n > Long.MinValue)
-          ranges += ((c, Long.MinValue, n - 1))
-        for (c <- intAttr(y); n <- litLong(x) if n < Long.MaxValue)
-          ranges += ((c, n + 1, Long.MaxValue))
-      case CLte(x, y) =>
-        for (c <- intAttr(x); n <- litLong(y))
-          ranges += ((c, Long.MinValue, n))
-        for (c <- intAttr(y); n <- litLong(x))
-          ranges += ((c, n, Long.MaxValue))
-      case CEq(a, l) if attr(a).isDefined || attr(l).isDefined =>
-        val (ae, le) = if (attr(a).isDefined) (a, l) else (l, a)
-        for ((c, dt) <- attr(ae)) {
-          if (integral(dt)) litLong(le).foreach { n =>
-            ranges += ((c, n, n))
-            values += ((c, Seq(n.toString)))
-          }
-          if (dt == StringType) litStr(le).foreach { v =>
-            values += ((c, Seq(v)))
-          }
-        }
-      case CIn(a, list) =>
-        // all-or-nothing per list (the catalog's accept rule): a
-        // partial rendering would prune a partition holding only an
-        // unrendered value
-        for ((c, dt) <- attr(a); if list.nonEmpty) {
-          if (integral(dt)) {
-            val ns = list.flatMap(litLong)
-            if (ns.length == list.length)
-              values += ((c, ns.map(_.toString)))
-          } else if (dt == StringType) {
-            val ss = list.flatMap(litStr)
-            if (ss.length == list.length) values += ((c, ss))
-          }
-        }
-      case _ => ()
-    }
-    walk(cond)
-    (ranges.result(), values.result())
-  }
-
-  /** The WHERE verbs' find-touched probe, pre-pruned through the shared
-    * skipping kernel: manifest entries every tier with an opinion
-    * admits for [[predPruneHints]]' conjuncts, plus the live frame over
-    * just those entries. Returns (full manifest, None) when no conjunct
-    * is extractable, nothing prunes, or the pruned subset cannot
-    * evaluate the predicate (its files predate a referenced column —
-    * the full-manifest union null-fills it, so fall back). An EMPTY
-    * entry list means every partition is provably hit-free. At 100 TB
-    * this is the difference between a predicate write that scans the
-    * corpus and one that scans the candidate partitions the sidecars
-    * admit. */
+  /** The WHERE verbs' find-touched probe, pre-pruned through the one
+    * skipping path ([[Skipping.hints]] → [[Skipping.read]]): manifest
+    * entries every tier with an opinion admits for the predicate's
+    * conjuncts, plus the live frame over just those entries. Returns
+    * (full manifest, None) when no conjunct yields a hint, nothing
+    * prunes, or the pruned subset cannot evaluate the predicate (its
+    * files predate a referenced column — the full-manifest union
+    * null-fills it, so fall back). An EMPTY entry list means every
+    * partition is provably hit-free. At 100 TB this is the difference
+    * between a predicate write that scans the corpus and one that scans
+    * the candidate partitions the sidecars admit. */
   private def prunedLiveForPredicate(s: SparkSession, corpusDir: String,
       v: Long, man: Seq[(String, String)], partCol: String,
       pred: Column, src: DataFrame)
       : (Seq[(String, String)], Option[DataFrame]) = {
-    val (ranges, values) = predPruneHints(src, pred)
-    if (ranges.isEmpty && values.isEmpty) return (man, None)
-    val entries = skipEntries(s, corpusDir, v, man, ranges, values,
-      if (ranges.isEmpty) Map.empty
-      else Versioned.readStatsMulti(s, corpusDir, v),
-      if (values.isEmpty) Map.empty
-      else Versioned.readStatsDict(s, corpusDir, v),
-      if (values.isEmpty) Map.empty
-      else Versioned.readStatsBloom(s, corpusDir, v,
-        Some(values.map(_._1).toSet)))
-    if (entries.length == man.length) (man, None)
-    else if (entries.isEmpty) (Nil, None)
+    val h = Skipping.hints(src, pred)
+    if (h.isEmpty) return (man, None)
+    val pruned = Skipping.read(s, corpusDir, v, man, Some(partCol), h)
+    if (pruned.kept.length == man.length) (man, None)
+    else if (pruned.kept.isEmpty) (Nil, None)
     else
-      try (entries, Some(Versioned.readEntriesLive(s, corpusDir, v,
-        entries, Some(partCol)).where(coalesce(pred, lit(false)))))
+      try (pruned.kept,
+           Some(pruned.frame.where(coalesce(pred, lit(false)))))
       catch {
         case _: org.apache.spark.sql.AnalysisException => (man, None)
       }
@@ -2020,20 +1894,10 @@ object MergeOps {
     val entries = man.filter { case (n, _) =>
       stats.get(n).forall { case (slo, shi) => shi >= lo && slo <= hi }
     }
-    // Every partition pruned: an empty frame with the corpus schema,
-    // recovered from ONE manifest entry — the newest-staged one, whose
-    // schema is authoritative under the batch-wins evolution rule — so
-    // the all-pruned case costs one directory listing, not the full
-    // per-partition metadata walk the pruning exists to avoid (r8
-    // advice).
-    if (entries.isEmpty) {
-      val newest = man.maxBy(e =>
-        Versioned.stageDirVersion(e._2.split("/")(1)).getOrElse(0L))
-      Versioned.readEntries(s, corpusDir, Seq(newest), Some(partCol))
-        .limit(0)
-        .where(col(keyCol) >= lo && col(keyCol) <= hi)
-    }
-    else Versioned.readEntriesLive(s, corpusDir, v, entries, Some(partCol))
+    // every partition pruned: the one-entry empty-schema frame
+    (if (entries.isEmpty)
+       Versioned.emptyFrame(s, corpusDir, man, Some(partCol))
+     else Versioned.readEntriesLive(s, corpusDir, v, entries, Some(partCol)))
       .where(col(keyCol) >= lo && col(keyCol) <= hi)
   }
 
@@ -2256,8 +2120,8 @@ object MergeOps {
       else {
         // no changed entries on this side (all-new or all-dropped
         // partitions live on the other) — an empty frame at this side's
-        // schema, from its newest staged dir (the readCorpusPruned
-        // all-pruned recovery idiom). A fully EMPTY manifest cannot
+        // schema, from its newest staged dir (the all-pruned recovery
+        // idiom, [[Versioned.emptyFrame]]). A fully EMPTY manifest cannot
         // supply a schema: unreachable today (emptying a table fails
         // fast everywhere), guarded loudly for the day a MOR-emptied
         // table meets the feed (r11 verdict nit).
@@ -2265,10 +2129,7 @@ object MergeOps {
           s"changeFeed: a side of the $fromV->$toV diff under $corpusDir " +
             "has an empty manifest — its schema cannot be recovered; an " +
             "emptied table cannot feed a diff")
-        val newest = man.maxBy(e =>
-          Versioned.stageDirVersion(e._2.split("/")(1)).getOrElse(0L))
-        Versioned.readEntries(s, corpusDir, Seq(newest), Some(partCol))
-          .limit(0)
+        Versioned.emptyFrame(s, corpusDir, man, Some(partCol))
       }
     }
     val o = side(fromV, manFrom)
@@ -2350,258 +2211,17 @@ object MergeOps {
     }
   }
 
-  /** INTERSECTION zone-map pruning over multi-column bounds
-    * ([[Versioned.readStatsMulti]]): keep a manifest entry only if
-    * EVERY predicate's range overlaps that partition's recorded bounds
-    * for the predicate's column — a partition with no bounds for some
-    * column is kept (stats are an optimization, never a correctness
-    * gate). This is what per-column stats buy at 100 TB: the writer
-    * clusters by ONE dimension, but a second predicate on a correlated
-    * column (order keys within a customer range, timestamps within an
-    * ingest day) still prunes — the reader needs no knowledge of the
-    * clustering, only the bounds. The residual conjunction is applied
-    * on the surviving rows, so the result is exactly the filtered
-    * corpus regardless of how much pruning bit. */
-  def readCorpusPruned(s: SparkSession, corpusDir: String, partCol: String,
-                       ranges: Seq[(String, Long, Long)]): DataFrame = {
-    require(ranges.nonEmpty, "readCorpusPruned needs at least one range")
-    val v = Versioned.currentVersion(s, corpusDir)
-      .getOrElse(sys.error(s"no committed version under $corpusDir"))
-    val stats = Versioned.readStatsMulti(s, corpusDir, v)
-    val man = Versioned.manifest(s, corpusDir, v)
-    val entries = man.filter { case (n, _) =>
-      stats.get(n).forall { cols =>
-        ranges.forall { case (c, lo, hi) =>
-          cols.get(c).forall { case (slo, shi) => shi >= lo && slo <= hi }
-        }
-      }
-    }
-    val residual = ranges.map { case (c, lo, hi) =>
-      col(c) >= lo && col(c) <= hi }.reduce(_ && _)
-    // every partition pruned: recover the schema from the newest-staged
-    // entry (same rationale as readCorpusKeyPruned's all-pruned case)
-    if (entries.isEmpty) {
-      val newest = man.maxBy(e =>
-        Versioned.stageDirVersion(e._2.split("/")(1)).getOrElse(0L))
-      Versioned.readEntries(s, corpusDir, Seq(newest), Some(partCol))
-        .limit(0).where(residual)
-    }
-    else Versioned.readEntriesLive(s, corpusDir, v, entries, Some(partCol))
-      .where(residual)
-  }
-
-  /** DICTIONARY pruning over per-partition distinct sets
-    * ([[graft.engine.Versioned.readStatsDict]]): keep a manifest entry
-    * only if, for EVERY predicate, some wanted value appears in that
-    * partition's recorded dictionary for the column — the equality/IN
-    * complement to [[readCorpusPruned]]'s range overlap. A partition
-    * with no dictionary for some column is kept (over-cap or never
-    * recorded — stats are an optimization, never a correctness gate),
-    * and the residual IN-conjunction runs on the survivors, so the
+  /** COMPOSED data skipping over the current version ([[Skipping.read]]):
+    * range zone maps for the `ranges` predicates (inclusive bounds on
+    * integral columns), and the dictionary, bloom and manifest-name
+    * tiers for each `values` (equality/IN over `cast(col AS string)`
+    * renderings) predicate — a partition is kept only if EVERY tier
+    * that has an opinion admits it (a partition with no line in some
+    * tier is admitted by that tier — stats are never a correctness
+    * gate). The residual conjunction runs on the survivors, so the
     * result is exactly the filtered corpus however much pruning bit.
-    * What it buys at 100 TB: the writer clusters by ONE dimension
-    * (ingest year, hash bucket), and an equality predicate on a
-    * correlated categorical column (status, lang, source) skips the
-    * partitions that never saw the value — the case range bounds
-    * cannot express because min ≤ v ≤ max is true for almost any
-    * categorical once two distinct values exist. */
-  def readCorpusDictPruned(s: SparkSession, corpusDir: String,
-                           partCol: String,
-                           preds: Seq[(String, Seq[String])]): DataFrame = {
-    require(preds.nonEmpty, "readCorpusDictPruned needs at least one " +
-      "(column, wanted-values) predicate")
-    val v = Versioned.currentVersion(s, corpusDir)
-      .getOrElse(sys.error(s"no committed version under $corpusDir"))
-    val dicts = Versioned.readStatsDict(s, corpusDir, v)
-    val man = Versioned.manifest(s, corpusDir, v)
-    val entries = man.filter { case (n, _) =>
-      dicts.get(n).forall { cols =>
-        preds.forall { case (c, vals) =>
-          cols.get(c).forall(set => vals.exists(set.contains))
-        }
-      }
-    }
-    // every partition pruned: recover the schema from the newest-staged
-    // entry (the shared all-pruned idiom)
-    val base =
-      if (entries.isEmpty) {
-        val newest = man.maxBy(e =>
-          Versioned.stageDirVersion(e._2.split("/")(1)).getOrElse(0L))
-        Versioned.readEntries(s, corpusDir, Seq(newest), Some(partCol))
-          .limit(0)
-      }
-      else Versioned.readEntriesLive(s, corpusDir, v, entries, Some(partCol))
-    base.where(preds.map { case (c, vals) =>
-      typedInResidual(base, c, vals) }.reduce(_ && _))
-  }
-
-  /** Type-aware equality/IN residual for the pruned readers: cast the
-    * literal VALUES to the column's type instead of casting the COLUMN
-    * to string, so the predicate reaches parquet as a pushable
-    * `In(col, …)` DataFilter and row-group stats skip inside the
-    * partitions the sidecars kept — a cast-wrapped column is not a
-    * pushable parquet filter, and at 100 TB that is the difference
-    * between reading one row group and one partition. Values that
-    * cannot cast to the column's type (checked driver-side with TRY
-    * semantics, so an ANSI session never throws) can match no row of
-    * that type and are dropped; if none survive the residual is
-    * `false`. String columns keep the plain isin. The SIDECAR probes
-    * are untouched: dictionaries store string renderings and blooms
-    * hash `xxhash64(cast(col AS string))` on both sides, so prune
-    * decisions are bit-identical — only the residual's shape changes. */
-  private[graft] def typedInResidual(df: DataFrame, c: String,
-                                     vals: Seq[String]): Column = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
-    import org.apache.spark.sql.types.StringType
-    val dt = df.schema.fields.find(_.name.equalsIgnoreCase(c))
-      .map(_.dataType).getOrElse(StringType)
-    if (dt == StringType) col(c).isin(vals: _*)
-    else {
-      val castable = vals.filter { v =>
-        Cast(Literal(org.apache.spark.unsafe.types.UTF8String.fromString(v),
-              StringType), dt, Some("UTC"), EvalMode.TRY)
-          .eval(null) != null
-      }
-      if (castable.isEmpty) lit(false)
-      else col(c).isin(castable.map(v => lit(v).cast(dt)): _*)
-    }
-  }
-
-  /** The hash the bloom sidecar is keyed by, computed ON THE DRIVER for
-    * the pruning probe: Spark's own `XxHash64` expression evaluated on
-    * the string literal — bit-identical to the executor-side
-    * `xxhash64(cast(col AS string))` the writer aggregated, because it
-    * IS the same expression (default seed 42). */
-  private[graft] def bloomProbeHash(v: String): Long =
-    new org.apache.spark.sql.catalyst.expressions.XxHash64(
-      Seq(org.apache.spark.sql.catalyst.expressions.Literal(
-        org.apache.spark.unsafe.types.UTF8String.fromString(v),
-        org.apache.spark.sql.types.StringType))).eval(null)
-      .asInstanceOf[Long]
-
-  /** BLOOM pruning over per-partition filters
-    * ([[graft.engine.Versioned.readStatsBloom]]): keep a manifest entry
-    * only if, for EVERY predicate, some wanted value MIGHT be in that
-    * partition's recorded filter for the column — the high-cardinality
-    * point-lookup complement to range ([[readCorpusPruned]]) and
-    * dictionary ([[readCorpusDictPruned]]) skipping. A partition with
-    * no filter for some column is kept (over-cap or never recorded —
-    * stats are an optimization, never a correctness gate), a FALSE
-    * POSITIVE merely reads a partition the residual IN-conjunction
-    * then empties, and the residual runs on every survivor, so the
-    * result is exactly the filtered corpus however much pruning bit.
-    * What it buys at 100 TB: a `doc_id = X` lookup on a corpus
-    * clustered by something else entirely (language, date, source)
-    * reads the ONE partition whose filter admits X instead of all of
-    * them — the case where range bounds span everything (hash-spread
-    * high-cardinality keys) and dictionaries blew their cap long ago.
-    * The driver probes #partitions × #values hashes against in-memory
-    * sketches — bounded metadata work, no data read before the prune. */
-  def readCorpusBloomPruned(s: SparkSession, corpusDir: String,
-                            partCol: String,
-                            preds: Seq[(String, Seq[String])]): DataFrame = {
-    require(preds.nonEmpty, "readCorpusBloomPruned needs at least one " +
-      "(column, wanted-values) predicate")
-    val v = Versioned.currentVersion(s, corpusDir)
-      .getOrElse(sys.error(s"no committed version under $corpusDir"))
-    val blooms = Versioned.readStatsBloom(s, corpusDir, v,
-      Some(preds.map(_._1).toSet))
-    val man = Versioned.manifest(s, corpusDir, v)
-    val hashed = preds.map { case (c, vals) =>
-      (c, vals.map(bloomProbeHash)) }
-    val entries = man.filter { case (n, _) =>
-      blooms.get(n).forall { cols =>
-        hashed.forall { case (c, hs) =>
-          cols.get(c).forall(bf => hs.exists(bf.mightContainLong))
-        }
-      }
-    }
-    // every partition pruned: recover the schema from the newest-staged
-    // entry (the shared all-pruned idiom)
-    val base =
-      if (entries.isEmpty) {
-        val newest = man.maxBy(e =>
-          Versioned.stageDirVersion(e._2.split("/")(1)).getOrElse(0L))
-        Versioned.readEntries(s, corpusDir, Seq(newest), Some(partCol))
-          .limit(0)
-      }
-      else Versioned.readEntriesLive(s, corpusDir, v, entries, Some(partCol))
-    base.where(preds.map { case (c, vals) =>
-      typedInResidual(base, c, vals) }.reduce(_ && _))
-  }
-
-  /** The shared three-tier PRUNING KERNEL: keep a manifest entry only
-    * if every tier with an opinion admits it — range zone maps for the
-    * `ranges` predicates, dictionary + bloom for each `values`
-    * (equality/IN) predicate, plus (when `partCol` is given) the
-    * manifest NAME itself for values on the partition column — the
-    * zeroth tier every table format gets for free: `col=value` dir
-    * names ARE the partition index, no sidecar needed. A partition
-    * with no line in some tier is admitted by that tier (stats are an
-    * optimization, never a correctness gate). Tiers short-circuit
-    * cheapest-first, so a partition the name/range/dict tiers pruned
-    * never deserializes its bloom bitset (the
-    * [[graft.engine.LazyBloom]] contract — decoded driver heap is
-    * O(survivors × probed columns), not O(all partitions)). Shared by
-    * [[readCorpusSkipPruned]] and the SQL front door
-    * ([[graft.sql.GraftCatalog]]), so DataFrame and SQL reads prune
-    * through the ONE kernel. */
-  private[graft] def skipEntries(s: SparkSession, corpusDir: String,
-      v: Long, man: Seq[(String, String)],
-      ranges: Seq[(String, Long, Long)],
-      values: Seq[(String, Seq[String])],
-      stats: Map[String, Map[String, (Long, Long)]],
-      dicts: Map[String, Map[String, Set[String]]],
-      blooms: Map[String, Map[String, graft.engine.LazyBloom]])
-      : Seq[(String, String)] = {
-    val hashed = values.map { case (c, vals) =>
-      (c, vals.map(bloomProbeHash)) }
-    // the name tier is LAYOUT-AWARE (metadata-tier partition
-    // evolution): an entry's own `col=` prefix says which spec wrote
-    // it, so a value predicate on THAT column prunes by dir name while
-    // entries of other layouts pass to the sidecar tiers — per-layout
-    // pruning over a mixed manifest, Iceberg's spec-evolution read
-    // shape
-    val nameWanted = values.map { case (c, vals) =>
-      (c, vals.map(x =>
-        Versioned.partDirName(c, x).drop(c.length + 1)).toSet) }
-    man.filter { case (n, _) =>
-      val layout = n.takeWhile(_ != '=')
-      def nameOk = !n.contains('=') ||
-        nameWanted.forall { case (c, wantedVals) =>
-          !layout.equalsIgnoreCase(c) ||
-            wantedVals.contains(n.drop(layout.length + 1)) }
-      def rangeOk = stats.get(n).forall { cols =>
-        ranges.forall { case (c, lo, hi) =>
-          cols.get(c).forall { case (slo, shi) => shi >= lo && slo <= hi }
-        }
-      }
-      def dictOk = dicts.get(n).forall { cols =>
-        values.forall { case (c, vals) =>
-          cols.get(c).forall(set => vals.exists(set.contains))
-        }
-      }
-      def bloomOk = blooms.get(n).forall { cols =>
-        hashed.forall { case (c, hs) =>
-          cols.get(c).forall(bf => hs.exists(bf.mightContainLong))
-        }
-      }
-      nameOk && rangeOk && dictOk && bloomOk
-    }
-  }
-
-  /** COMPOSED data skipping — all three sidecar tiers in ONE pruning
-    * pass: range zone maps for the `ranges` predicates, and BOTH the
-    * dictionary and bloom tiers for each `values` (equality/IN)
-    * predicate — a partition is kept only if EVERY tier that has an
-    * opinion admits it (a recorded dictionary with none of the wanted
-    * values prunes even when the bloom false-positives, and vice
-    * versa; a partition with no line in some tier is admitted by that
-    * tier — stats are never a correctness gate). The residual
-    * conjunction runs on the survivors, so the result is exactly the
-    * filtered corpus however much pruning bit. This is the entry point
-    * a query planner would call: one manifest pass, driver-side
-    * metadata probes only, then the minimal read. */
+    * One manifest pass, driver-side metadata probes only, then the
+    * minimal read. */
   def readCorpusSkipPruned(s: SparkSession, corpusDir: String,
                            partCol: String,
                            ranges: Seq[(String, Long, Long)] = Nil,
@@ -2611,25 +2231,8 @@ object MergeOps {
       "readCorpusSkipPruned needs at least one range or value predicate")
     val v = Versioned.currentVersion(s, corpusDir)
       .getOrElse(sys.error(s"no committed version under $corpusDir"))
-    val stats = Versioned.readStatsMulti(s, corpusDir, v)
-    val dicts = Versioned.readStatsDict(s, corpusDir, v)
-    val blooms = Versioned.readStatsBloom(s, corpusDir, v,
-      Some(values.map(_._1).toSet))
-    val man = Versioned.manifest(s, corpusDir, v)
-    val entries = skipEntries(s, corpusDir, v, man, ranges, values,
-      stats, dicts, blooms)
-    val base =
-      if (entries.isEmpty) {
-        val newest = man.maxBy(e =>
-          Versioned.stageDirVersion(e._2.split("/")(1)).getOrElse(0L))
-        Versioned.readEntries(s, corpusDir, Seq(newest), Some(partCol))
-          .limit(0)
-      }
-      else Versioned.readEntriesLive(s, corpusDir, v, entries, Some(partCol))
-    val preds =
-      ranges.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi } ++
-        values.map { case (c, vals) => typedInResidual(base, c, vals) }
-    base.where(preds.reduce(_ && _))
+    Skipping.read(s, corpusDir, v, Versioned.manifest(s, corpusDir, v),
+      Some(partCol), Skipping.Hints(ranges, values)).frame
   }
 
   /** Read the current committed corpus state (see [[Versioned]]). */
@@ -3923,8 +3526,8 @@ object MergeOps {
               (col("o_custkey") / 512).cast("long").as("cb"))
     mergeUpsert(s, dir, o, "o_orderkey", "cb",
                 statsKeys = Seq("o_custkey", "o_orderkey"))
-    readCorpusPruned(s, dir, "cb",
-        Seq(("o_custkey", 40L, 139L), ("o_orderkey", 0L, 1200L)))
+    readCorpusSkipPruned(s, dir, "cb",
+        ranges = Seq(("o_custkey", 40L, 139L), ("o_orderkey", 0L, 1200L)))
       .select(col("o_orderkey"), col("o_custkey"),
               round(col("o_totalprice"), 2).as("price_r"))
       .orderBy("o_orderkey")
@@ -3959,8 +3562,8 @@ object MergeOps {
         .count(_._2("source").contains("src13")) == 1,
       "exactly one source group's dictionary must hold src13 — " +
         "the point lookup must actually prune")
-    readCorpusDictPruned(s, dir, "src_grp",
-        Seq(("source", Seq("src13"))))
+    readCorpusSkipPruned(s, dir, "src_grp",
+        values = Seq(("source", Seq("src13"))))
       .select(col("doc_id"), col("source").cast("string").as("source"),
               col("n_chars"))
       .orderBy("doc_id")
@@ -3997,12 +3600,13 @@ object MergeOps {
     val blooms = Versioned.readStatsBloom(s, dir, 1L)
     val kept = Versioned.manifest(s, dir, 1L).count { case (n, _) =>
       blooms.get(n).forall(cols => cols.get("doc_id").forall(bf =>
-        probes.exists(v => bf.mightContainLong(bloomProbeHash(v)))))
+        probes.exists(v =>
+          bf.mightContainLong(Skipping.bloomProbeHash(v)))))
     }
     require(kept < Versioned.manifest(s, dir, 1L).size,
       s"the doc_id blooms must prune at least one source group, kept $kept")
-    readCorpusBloomPruned(s, dir, "src_grp",
-        Seq(("doc_id", probes)))
+    readCorpusSkipPruned(s, dir, "src_grp",
+        values = Seq(("doc_id", probes)))
       .select(col("doc_id"), col("source").cast("string").as("source"),
               col("n_chars"))
       .orderBy("doc_id")
@@ -4179,8 +3783,8 @@ object MergeOps {
       statsKeys = Seq("o_custkey", "o_orderkey"))
     require(Versioned.readDvRefs(s, dir, 3L).isEmpty,
       "the z-order restage must materialize every deletion vector")
-    readCorpusPruned(s, dir, "cb",
-        Seq(("o_custkey", 40L, 139L), ("o_orderkey", 0L, 1200L)))
+    readCorpusSkipPruned(s, dir, "cb",
+        ranges = Seq(("o_custkey", 40L, 139L), ("o_orderkey", 0L, 1200L)))
       .select(col("o_orderkey"), col("o_custkey"),
               round(col("o_totalprice"), 2).as("price_r"))
       .orderBy("o_orderkey")
@@ -4224,8 +3828,8 @@ object MergeOps {
     require(Versioned.readStatsDict(s, dir, 3L)
         .get(shedGrp).exists(_("source").contains("src13")),
       s"the refresh must re-arm $shedGrp's dictionary with src13")
-    readCorpusDictPruned(s, dir, "src_grp",
-        Seq(("source", Seq("src13"))))
+    readCorpusSkipPruned(s, dir, "src_grp",
+        values = Seq(("source", Seq("src13"))))
       .select(col("doc_id"), col("source").cast("string").as("source"),
               col("n_chars"))
       .orderBy("doc_id")

@@ -189,8 +189,8 @@ class Wave19Spec extends SparkTestBase {
     MergeOps.mergeUpsert(spark, dir, rows(0L until 100L), "k", "b",
       statsKeys = Seq("a", "c"))                                    // v1
     def prune(aLo: Long, aHi: Long, cLo: Long, cHi: Long) =
-      MergeOps.readCorpusPruned(spark, dir, "b",
-        Seq(("a", aLo, aHi), ("c", cLo, cHi)))
+      MergeOps.readCorpusSkipPruned(spark, dir, "b",
+        ranges = Seq(("a", aLo, aHi), ("c", cLo, cHi)))
     // a ∈ [60,150] keeps k ∈ [20,50]; c ∈ [880,940] keeps k ∈ [20,40]
     // → intersection k ∈ [20,40] = buckets 2..4 of 10
     val got = prune(60, 150, 880, 940).select("k").collect()
@@ -243,8 +243,9 @@ class Wave19Spec extends SparkTestBase {
     val sn = graft.engine.Versioned.readStatsMulti(spark, dirN, 1L)
     assert(!sn("b=1").contains("a") && sn("b=1").contains("c"),
       s"all-null column must have no bounds, others keep theirs: $sn")
-    val nGot = MergeOps.readCorpusPruned(spark, dirN, "b",
-        Seq(("a", 0L, 20L))).select("k").collect().map(_.getLong(0)).toSet
+    val nGot = MergeOps.readCorpusSkipPruned(spark, dirN, "b",
+        ranges = Seq(("a", 0L, 20L)))
+      .select("k").collect().map(_.getLong(0)).toSet
     assert(nGot == (0L to 6L).toSet,
       s"boundless partitions are pruned by the RESIDUAL only, got $nGot")
   }
@@ -359,7 +360,8 @@ class Wave19Spec extends SparkTestBase {
     assert(s2("p=d1")("k") == (1L, 3L) && s2("p=d3")("k") == (7L, 9L) &&
       !s2.contains("p=d2"), s"stats carry, got $s2")
     // pruning still correct with the superset bounds
-    val pr = MergeOps.readCorpusPruned(spark, dir, "p", Seq(("k", 1L, 3L)))
+    val pr = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+        ranges = Seq(("k", 1L, 3L)))
       .select("k").collect().map(_.getLong(0)).toSet
     assert(pr == Set(1L, 3L))
     // CDC sees the row deletes as deletes — downstream consumers

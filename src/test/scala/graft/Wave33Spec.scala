@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.engine.Versioned
+import graft.engine.{Skipping, Versioned}
 import graft.ops.MergeOps
 
 /** Round-13 wave 3: per-partition BLOOM sidecars — the third
@@ -32,14 +32,14 @@ class Wave33Spec extends SparkTestBase {
     val blooms = Versioned.readStatsBloom(spark, dir, 1L)
     assert(blooms.size == 4 && blooms.values.forall(_.contains("k")),
       "every partition must have recorded a doc-level bloom on k")
-    val pruned = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("41"))))
+    val pruned = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("41"))))
     val rows = pruned.collect().map(r => (r.getLong(0), r.get(2).toString))
     assert(rows.toSeq == Seq((41L, "1")))
     // the never-reads pin: input files ⊆ dirs of partitions whose bloom
     // admitted the probe (p=1 plus any false positive — never all four)
     val man = Versioned.manifest(spark, dir, 1L).toMap
-    val h = MergeOps.bloomProbeHash("41")  // the pruner's own probe
+    val h = Skipping.bloomProbeHash("41")  // the pruner's own probe
     val keptParts = man.keys.filter(n =>
       blooms(n)("k").mightContainLong(h)).toSet
     assert(keptParts.contains("p=1") && keptParts.size < man.size,
@@ -68,12 +68,12 @@ class Wave33Spec extends SparkTestBase {
     assert(!blooms2.contains("p=2") && blooms2.size == 3,
       "the restaged partition's bloom line must drop")
     // 999 is only in the lineless partition: found via the always-read
-    val got = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("999")))).collect()
+    val got = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("999")))).collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(999L))
     // absent value: exact empty whatever the blooms said
-    val absent = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("123456789"))))
+    val absent = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("123456789"))))
     assert(absent.count() == 0L)
     assert(absent.columns.toSeq == Seq("k", "v", "p"))
   }
@@ -93,15 +93,15 @@ class Wave33Spec extends SparkTestBase {
     assert(b2.size == 4, "untouched partitions' lines carry, the " +
       "restaged partition re-records")
     assert(b2("p=1")("k").mightContainLong(
-        MergeOps.bloomProbeHash("601")),
+        Skipping.bloomProbeHash("601")),
       "the fresh line must cover the new key")
     MergeOps.applyRetention(spark, dir, _ != "p=3")                  // v3
     val b3 = Versioned.readStatsBloom(spark, dir, 3L)
     assert(b3.keySet == b2.keySet - "p=3",
       "retention must carry surviving partitions' bloom lines and drop " +
         "the retired partition's")
-    val got = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("601", "42")))).collect()
+    val got = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("601", "42")))).collect()
       .map(_.getLong(0)).toSeq.sorted
     assert(got == Seq(42L, 601L))
     Versioned.rollback(spark, dir, 2L)                               // v4
@@ -164,7 +164,7 @@ class Wave33Spec extends SparkTestBase {
     MergeOps.refreshStats(spark, dir, "p", bloomKeys = Seq("k"))     // v4
     val b4 = Versioned.readStatsBloom(spark, dir, 4L)
     assert(b4.size == 4 &&
-      !b4("p=1")("k").mightContainLong(MergeOps.bloomProbeHash("41")),
+      !b4("p=1")("k").mightContainLong(Skipping.bloomProbeHash("41")),
       "the refreshed bloom must be built from live rows only")
     assert(Versioned.readStatsMulti(spark, dir, 4L).size == 4,
       "a bloom refresh must carry the range bounds untouched")
@@ -173,9 +173,9 @@ class Wave33Spec extends SparkTestBase {
       statsKeys = Seq("k"), bloomKeys = Seq("k"))                    // v5
     val b5 = Versioned.readStatsBloom(spark, dir, 5L)
     assert(b5.size == 4 &&
-      b5("p=2")("k").mightContainLong(MergeOps.bloomProbeHash("42")))
-    val got = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("42", "41")))).collect().map(_.getLong(0)).toSeq
+      b5("p=2")("k").mightContainLong(Skipping.bloomProbeHash("42")))
+    val got = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("42", "41")))).collect().map(_.getLong(0)).toSeq
     assert(got == Seq(42L))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.engine.Versioned
+import graft.engine.{Skipping, Versioned}
 import graft.ops.MergeOps
 
 /** Round-14 wave 1: the two scale fixes on the bloom skipping tier —
@@ -41,8 +41,8 @@ class Wave36Spec extends SparkTestBase {
     val dir = freshDir("graft_typed_resid")
     MergeOps.mergeUpsert(spark, dir, corpus(400), "k", "p",
                          bloomKeys = Seq("k"))
-    val pruned = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("2", "23", "41"))))
+    val pruned = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("2", "23", "41"))))
     val plan = pruned.queryExecution.executedPlan.toString
     assert(!plan.contains("cast(k"),
       s"the residual must not cast the column:\n$plan")
@@ -87,12 +87,12 @@ class Wave36Spec extends SparkTestBase {
     MergeOps.mergeUpsert(spark, dir, corpus(100), "k", "p",
                          bloomKeys = Seq("k"))
     // mixed castable/uncastable: the uncastable value just drops
-    val mixed = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("41", "not-a-number"))))
+    val mixed = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("41", "not-a-number"))))
     assert(mixed.collect().map(_.getLong(0)).toSeq == Seq(41L))
     // all-uncastable: residual is false — exact empty, right schema
-    val none = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("abc"))))
+    val none = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("abc"))))
     assert(none.count() == 0L &&
       none.columns.toSeq == Seq("k", "v", "p"))
   }
@@ -114,7 +114,7 @@ class Wave36Spec extends SparkTestBase {
     val all = Versioned.readStatsBloom(spark, dir, 1L)
     assert(all.values.flatMap(_.values).forall(!_.isDecoded),
       "no bitset may deserialize before a probe")
-    all("p=1")("k").mightContainLong(MergeOps.bloomProbeHash("41"))
+    all("p=1")("k").mightContainLong(Skipping.bloomProbeHash("41"))
     assert(all("p=1")("k").isDecoded)
     assert(all.collect { case (n, cols) if n != "p=1" =>
         cols.values }.flatten.forall(!_.isDecoded) &&
@@ -141,7 +141,7 @@ class Wave36Spec extends SparkTestBase {
     // decode bound: dict prunes 3 of 4, so ≤1 bloom decodes
     val dicts = Versioned.readStatsDict(spark, dir, 1L)
     val blooms = Versioned.readStatsBloom(spark, dir, 1L, Some(Set("c")))
-    val h = MergeOps.bloomProbeHash("hot")
+    val h = Skipping.bloomProbeHash("hot")
     val survivors = Versioned.manifest(spark, dir, 1L).filter {
       case (n, _) =>
         dicts.get(n).forall(_.get("c").forall(_.contains("hot"))) &&

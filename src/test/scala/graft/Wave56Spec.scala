@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.engine.Versioned
+import graft.engine.{Skipping, Versioned}
 import graft.ops.MergeOps
 
 /** Round-17 wave: WHERE-verb probe pruning — the predicate forms'
@@ -34,33 +34,38 @@ class Wave56Spec extends SparkTestBase {
     acc.get()
   }
 
-  test("predPruneHints: simple AND conjuncts extract; derived exprs, " +
-       "ORs and rendering-unsafe literals decline") {
+  test("Skipping.hints: simple AND conjuncts extract; derived exprs, " +
+       "ORs, narrowing casts and rendering-unsafe literals decline") {
     val probe = spark.range(1).select(col("id").as("k"),
-      col("id").cast("double").as("v"), col("id").cast("string").as("s"))
-    val (r1, v1) = MergeOps.predPruneHints(probe,
+      col("id").cast("double").as("v"), col("id").cast("string").as("s"),
+      col("id").cast("int").as("i"))
+    val Skipping.Hints(r1, v1) = Skipping.hints(probe,
       col("k") >= 950 && col("v") > 1.5)
     assert(r1 == Seq(("k", 950L, Long.MaxValue)),
       s"integral conjunct must extract, double must not: $r1")
     assert(v1.isEmpty)
-    val (r2, v2) = MergeOps.predPruneHints(probe,
+    val Skipping.Hints(r2, v2) = Skipping.hints(probe,
       col("s") === "x" && col("k") === 7)
     assert(v2.contains(("s", Seq("x"))) && v2.contains(("k", Seq("7"))))
     assert(r2.contains(("k", 7L, 7L)))
     // a disjunction admits everything — no conjunct is provable
-    val (r3, v3) = MergeOps.predPruneHints(probe,
-      col("k") >= 5 || col("s") === "x")
-    assert(r3.isEmpty && v3.isEmpty)
+    assert(Skipping.hints(probe, col("k") >= 5 || col("s") === "x").isEmpty)
     // a double comparison against a long column compares in DOUBLE
     // (the attribute side is cast non-integrally): no hint may leak
-    val (r4, v4) = MergeOps.predPruneHints(probe, col("k") > lit(5.0))
-    assert(r4.isEmpty && v4.isEmpty)
+    assert(Skipping.hints(probe, col("k") > lit(5.0)).isEmpty)
     // reversed operand order flips the bound
-    val (r5, _) = MergeOps.predPruneHints(probe, lit(10) > col("k"))
-    assert(r5 == Seq(("k", Long.MinValue, 9L)))
+    assert(Skipping.hints(probe, lit(10) > col("k")).ranges ==
+      Seq(("k", Long.MinValue, 9L)))
     // IN is all-or-nothing
-    val (_, v6) = MergeOps.predPruneHints(probe, col("s").isin("a", "b"))
-    assert(v6 == Seq(("s", Seq("a", "b"))))
+    assert(Skipping.hints(probe, col("s").isin("a", "b")).values ==
+      Seq(("s", Seq("a", "b"))))
+    // a widening coercion cast unwraps onto the column; a narrowing
+    // cast wraps, so its bound says nothing about the raw column
+    assert(Skipping.hints(probe, col("i") >= 950L).ranges ==
+      Seq(("i", 950L, Long.MaxValue)))
+    assert(Skipping.hints(probe, col("k").cast("int") > 5).isEmpty)
+    // a double equality renders no value probe (-0.0 = 0.0)
+    assert(Skipping.hints(probe, col("v") === 0.0).isEmpty)
   }
 
   test("DELETE WHERE: the probe scans only zone-map-admitted " +
